@@ -170,18 +170,13 @@ def udf_grouped_map_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     def zscore_partition(batches):
         # One call per partition: concat the partition's Arrow batches
         # (groups may span batches), groupby in pandas, shared kernel.
+        # The batches keep the file's own key widths (int32 or int64).
         import pyarrow as pa
 
-        pdf = pa.Table.from_batches(
-            list(batches),
-            schema=pa.schema(
-                [
-                    ("o_custkey", pa.int64()),
-                    ("o_orderkey", pa.int64()),
-                    ("o_totalprice", pa.float64()),
-                ]
-            ),
-        ).to_pandas()
+        batches = list(batches)
+        if not batches:
+            return
+        pdf = pa.Table.from_batches(batches).to_pandas()
         if len(pdf):
             parts = [
                 zscore(g) for _, g in pdf.groupby("o_custkey", sort=False)

@@ -9,6 +9,8 @@ aggregations); all scores are per-row expressions that scale linearly.
 
 from __future__ import annotations
 
+from functools import cached_property
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -2281,6 +2283,220 @@ def text_dispersion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _LM_TRAIN_HI = "cd"  # the corpus_hash_split train boundary (~80%)
+_BI = ("prev", "cur")
+
+
+def _count(name: str):
+    return F.count(F.lit(1)).cast("long").alias(name)
+
+
+def _micro_nats(p):
+    """ln(p) as an integer micro-nat: round(ln(p)·1e6)::long."""
+    return F.round(F.log(p) * 1000000).cast("long")
+
+
+def _add_one_den():
+    # Weighted floors compute w·(c+1)/den in the oracles' order, not
+    # w·_add_one(c): the doubles, and so the micro-nats, could differ.
+    return F.col("n") + F.col("v") + F.lit(1.0)
+
+
+def _add_one(c: str):
+    """The add-one unigram (c + 1)/(N + V + 1), over ``tstat``."""
+    return (F.col(c) + 1) / _add_one_den()
+
+
+def _jm_bigram_p():
+    """0.7·c(prev,cur)/c(prev) + 0.3·(c(cur)+1)/(N+V+1); an unseen
+    context makes the bigram term 0, and the add-one floor carries."""
+    return (
+        F.when(F.col("cprev") > 0, F.lit(0.7) * F.col("cbi") / F.col("cprev"))
+        .otherwise(F.lit(0.0))
+        + F.lit(0.3) * (F.col("cuni") + 1) / _add_one_den()
+    )
+
+
+def _fold(rows: DataFrame, grams, count: str, keys=()) -> DataFrame:
+    """Explode the n-gram array ``grams`` of every row and count each
+    distinct n-gram into ``count``: struct n-grams group by their
+    ``keys`` fields, plain tokens by ``tok``."""
+    if not keys:
+        return rows.select(F.explode(grams).alias("tok")).groupBy("tok").agg(
+            _count(count)
+        )
+    by = [F.col(f"g.{k}").alias(k) for k in keys]
+    return rows.select(F.explode(grams).alias("g")).groupBy(*by).agg(_count(count))
+
+
+def _lookup(grams: DataFrame, *tables: DataFrame) -> DataFrame:
+    """Left-join each train count table onto ``grams`` on the columns
+    they share; a count the train slice never saw is 0."""
+    out, counts = grams, []
+    for t in tables:
+        on = [c for c in t.columns if c in out.columns]
+        counts += [c for c in t.columns if c not in on]
+        out = out.join(t, on, "left")
+    return out.select(
+        *grams.columns, *(F.coalesce(c, F.lit(0)).alias(c) for c in counts)
+    )
+
+
+def _classes(grams: DataFrame, *tables: DataFrame) -> DataFrame:
+    """Fold held-out n-gram counts ``m`` into classes of equal train
+    counts (the `_lookup` columns)."""
+    looked = _lookup(grams, *tables)
+    return looked.groupBy(*looked.columns[len(grams.columns) :]).agg(
+        F.sum("m").cast("long").alias("m")
+    )
+
+
+def _perplexity(stats, body, p_body, n_classes, head, p_head, *train_cols):
+    """Held-out perplexity of a model that scores the ``body`` class grid
+    with ``p_body`` and each document's context-free first tokens (the
+    ``head`` grid) with ``p_head``: exact class sums, one division,
+    ``exp``. ``stats`` is the one-row frame the formulas and
+    ``train_cols`` read."""
+    stats = F.broadcast(stats)
+
+    def total(cls, p, part, *more):
+        return (
+            cls.crossJoin(stats)
+            .select("m", _micro_nats(p).alias("li"))
+            .agg(
+                F.sum("m").cast("long").alias(f"m_{part}"),
+                F.sum(F.col("m") * F.col("li")).cast("long").alias(f"sl_{part}"),
+                *more,
+            )
+        )
+
+    m = F.col("m_body") + F.col("m_head")
+    avg = (F.col("sl_body") + F.col("sl_head")) * 1.0 / F.nullif(
+        m * F.lit(1000000.0), F.lit(0.0)
+    )
+    return (
+        total(body, p_body, "body", _count(n_classes))
+        .crossJoin(F.broadcast(total(head, p_head, "head")))
+        .crossJoin(stats)
+        .select(
+            *train_cols,
+            m.alias("eval_tokens"),
+            n_classes,
+            F.round(avg, 6).alias("avg_logprob"),
+            F.round(F.exp(-avg), 6).alias("perplexity"),
+        )
+    )
+
+
+class _LMCounts:
+    """The count tables of the language-model family, each built on
+    first use, so a key builds only the tables it reads.
+
+    * ``d`` — the documents as (doc_id, toks, is_train): ``toks`` splits
+      the text on single spaces; ``is_train`` is the `corpus_hash_split`
+      md5 boundary, so duplicates cannot straddle train and held-out.
+      ``train`` and ``held_out`` are its two slices.
+    * ``bigrams`` — each document's (prev, cur) struct array.
+    * train folds: ``tr_bi`` (prev, cur, cbi), ``tr_ctx`` (prev, cprev =
+      Σcbi, n1p = distinct continuations), ``tr_cont`` (cur, n1m =
+      distinct contexts), ``tr_uni`` (tok, cuni) and the one-row
+      ``tstat`` (n train tokens, v train types).
+    * held-out folds: ``ev_bi`` (prev, cur, m) and ``head(k)`` — each
+      document's first k tokens, the ones a k-context model cannot score
+      (tok, m).
+
+    ``d``, ``tr_bi`` and ``tr_uni`` are persisted, one site each: the
+    bigram and trigram keys read each of them from three or more plan
+    branches. The unigram key reads ``tr_uni`` from two and passes
+    ``persist_unigrams=False``, so it persists only ``d``.
+
+    Determinism discipline (every LM key): models read only exact
+    integer counts. Held-out n-gram instances fold to exact counts per
+    class of equal train-count tuples; each class's log-probability is
+    frozen ONCE as an integer micro-nat (`_micro_nats` — ln over
+    identical integer inputs is deterministic, so all instances of a
+    class carry the same integer), and every total is an exact BIGINT
+    (unigram: DECIMAL(38,0)) sum with no float-order exposure. The only
+    doubles are the final divisions, rounded. Class grids are bounded by
+    n-gram types, never by corpus volume; every count lookup is an
+    equi-join on grouped n-gram keys (≤1 row per key, no hot-token
+    skew).
+    """
+
+    def __init__(
+        self, spark: SparkSession, sf_dir: str, persist_unigrams: bool = True
+    ):
+        self._spark = spark
+        self._persist_unigrams = persist_unigrams
+        text = F.col("text")
+        self.d = self._persist(
+            "text.lm.d",
+            load_table(spark, sf_dir, "documents").select(
+                "doc_id",
+                F.split(text, " ").alias("toks"),
+                (
+                    F.substring(F.md5(text.cast("binary")), 1, 2) < _LM_TRAIN_HI
+                ).alias("is_train"),
+            ),
+        )
+        self.train = self.d.filter("is_train")
+        self.held_out = self.d.filter(~F.col("is_train"))
+
+    def _persist(self, site: str, df: DataFrame) -> DataFrame:
+        from presto_truffle_spark.cache import scoped_persist
+
+        return scoped_persist(self._spark, site, df)
+
+    @cached_property
+    def bigrams(self):
+        sz = F.size("toks")
+        return F.zip_with(
+            F.slice("toks", 1, sz - 1),
+            F.slice("toks", 2, sz - 1),
+            lambda p, c: F.struct(p.alias("prev"), c.alias("cur")),
+        )
+
+    @cached_property
+    def tr_bi(self) -> DataFrame:
+        return self._persist(
+            "text.lm.trbi", _fold(self.train, self.bigrams, "cbi", _BI)
+        )
+
+    @cached_property
+    def tr_ctx(self) -> DataFrame:
+        return self.tr_bi.groupBy("prev").agg(
+            F.sum("cbi").cast("long").alias("cprev"), _count("n1p")
+        )
+
+    @cached_property
+    def tr_cont(self) -> DataFrame:
+        return self.tr_bi.groupBy("cur").agg(_count("n1m"))
+
+    @cached_property
+    def tr_uni(self) -> DataFrame:
+        uni = _fold(self.train, "toks", "cuni")
+        return self._persist("text.lm.truni", uni) if self._persist_unigrams else uni
+
+    @cached_property
+    def tstat(self) -> DataFrame:
+        return self.tr_uni.agg(F.sum("cuni").cast("long").alias("n"), _count("v"))
+
+    @cached_property
+    def jm_tables(self) -> tuple[DataFrame, ...]:
+        """The train counts `_jm_bigram_p` reads, keyed for `_lookup` on
+        (prev, cur)."""
+        return (
+            self.tr_bi,
+            self.tr_ctx.select("prev", "cprev"),
+            self.tr_uni.withColumnRenamed("tok", "cur"),
+        )
+
+    @cached_property
+    def ev_bi(self) -> DataFrame:
+        return _fold(self.held_out, self.bigrams, "m", _BI)
+
+    def head(self, k: int) -> DataFrame:
+        toks = F.slice("toks", 1, F.least(F.lit(k), F.size("toks")))
+        return _fold(self.held_out, toks, "m")
 
 
 @query(
@@ -2336,18 +2552,15 @@ def text_unigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric a training pipeline tracks release-over-release (a corpus
     whose heldout PPL jumps got noisier; one whose PPL collapses got
     templated): train an add-one-smoothed unigram LM on the
-    `corpus_hash_split` train slice (SAME md5 boundary — duplicates
-    can't straddle the split), score the remaining ~20% of tokens,
+    `corpus_hash_split` train slice, score the remaining ~20% of tokens,
     PPL = exp(−mean log p), p(w) = (c_w + 1)/(N + V + 1) with the +1
     denominator slot standing for the single OOV class.
 
-    Determinism discipline: eval tokens are folded to (train-count c,
-    token count m_c) pairs — both exact integers — and each count
-    class's ln(c+1) is frozen ONCE as a rounded integer micro-nat, so
-    Σ m_c·li_c over the ≤|count-classes| grid (28 at sf0.01, 31 at
-    sf0.1) is an exact DECIMAL(38,0)/HUGEINT sum with NO float-order
-    exposure (the ccnet/bigram discipline, extended here per ADVICE
-    r11); the only doubles are the final divisions, rounded 6dp. Fixture honesty: the synthetic langs share one
+    Held-out tokens fold to (train count c, token count m_c) classes
+    (the `_LMCounts` discipline): ln(c+1) is one micro-nat per class,
+    ln(N+V+1) one for the whole model, so Σ m_c·li_c over the
+    ≤|count-classes| grid (28 at sf0.01, 31 at sf0.1) is an exact
+    DECIMAL(38,0) sum. Fixture honesty: the synthetic langs share one
     31-word vocabulary, so oov_rate = 0 and PPL ≈ 30 ≈ V — the harness
     is the capability; real corpora put OOV mass and the count-class
     grid to work.
@@ -2356,58 +2569,24 @@ def text_unigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts), one vocab-sized equi-join, then a count-class fold — no
     global sort, no window; nothing downstream of the folds is
     corpus-volume."""
-    d = load_table(spark, sf_dir, "documents").select(
-        "text",
-        (
-            F.substring(F.md5(F.col("text").cast("binary")), 1, 2)
-            < _LM_TRAIN_HI
-        ).alias("is_train"),
-    )
-    from presto_truffle_spark.cache import scoped_persist
-
-    d = scoped_persist(spark, "text.unilm.d", d)
-    tok = F.explode(F.split(F.col("text"), " ")).alias("tok")
-    tc = (
-        d.filter("is_train")
-        .select(tok)
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    tstat = tc.agg(
-        F.sum("c").cast("long").alias("n"),
-        F.count(F.lit(1)).cast("long").alias("v"),
-    )
-    ec = (
-        d.filter(~F.col("is_train"))
-        .select(tok)
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("m"))
-    )
-    joined = ec.join(tc, "tok", "left").select(
-        F.coalesce("c", F.lit(0)).alias("c"), "m"
-    )
-    grid = joined.groupBy("c").agg(F.sum("m").cast("long").alias("mc"))
-    li_c = F.round(F.log(F.col("c") + 1.0) * 1e6).cast("long")
+    c = _LMCounts(spark, sf_dir, persist_unigrams=False)
+    grid = _classes(_fold(c.held_out, "toks", "m"), c.tr_uni)
     s = grid.agg(
-        F.sum("mc").cast("long").alias("m_total"),
-        F.sum(F.when(F.col("c") == 0, F.col("mc")).otherwise(0))
+        F.sum("m").cast("long").alias("m_total"),
+        F.sum(F.when(F.col("cuni") == 0, F.col("m")).otherwise(0))
         .cast("long")
         .alias("oov_tokens"),
-        F.sum(F.col("mc").cast("decimal(38,0)") * li_c)
+        F.sum(F.col("m").cast("decimal(38,0)") * _micro_nats(F.col("cuni") + 1.0))
         .cast("decimal(38,0)")
         .alias("sli"),
-        F.count(F.lit(1)).cast("long").alias("n_count_classes"),
+        _count("n_count_classes"),
     )
-    li_den = F.round(
-        F.log(F.col("n") + F.col("v") + 1.0) * 1e6
-    ).cast("long")
     avg_lp = (
-        F.col("sli") - F.col("m_total").cast("decimal(38,0)") * li_den
-    ).cast("double") / F.nullif(
-        F.col("m_total") * F.lit(1000000.0), F.lit(0.0)
-    )
+        F.col("sli")
+        - F.col("m_total").cast("decimal(38,0)") * _micro_nats(_add_one_den())
+    ).cast("double") / F.nullif(F.col("m_total") * F.lit(1000000.0), F.lit(0.0))
     return (
-        F.broadcast(tstat)
+        F.broadcast(c.tstat)
         .crossJoin(s)
         .select(
             F.col("n").alias("train_tokens"),
@@ -2556,17 +2735,14 @@ def corpus_ccnet_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     LM (`tests/test_quality_gate_pin.py` pins the registered op's
     precision).
 
-    Determinism discipline (three layers, unchanged): (1) per-doc
-    scores never sum floats — every bigram INSTANCE's log-prob is an
-    integer micro-nat before any fold (ln over identical integer
-    (c_bi, c_prev, c_uni) inputs is deterministic, so all instances
-    of a class carry the same integer and the BIGINT per-doc sum is
-    order-free; the r4–r13 class-distinct freeze bought no extra
-    determinism and was fused away in r14 — 4 fewer shuffles,
-    value-identical); each doc's FIRST token scores under the pure
-    add-one unigram (the bigram op's convention, mirrored exactly);
-    (2) the per-doc normalization is ONE double division rounded to
-    integer micro-nats; (3) tertile
+    Determinism discipline (three layers): (1) per-doc scores never
+    sum floats — every bigram INSTANCE's log-prob is an integer
+    micro-nat before any fold (the `_LMCounts` discipline per instance
+    rather than per class: the BIGINT per-doc sum is order-free either
+    way, and the per-class freeze cost 4 shuffles); each doc's FIRST
+    token scores under the pure add-one unigram (the bigram op's
+    convention, mirrored exactly); (2) the per-doc normalization is
+    ONE double division rounded to integer micro-nats; (3) tertile
     thresholds come from the bucketed-rank discipline — a ≤1e4-bucket
     histogram of quantized scores with integer cumulative-count
     comparisons (cum·3 ≥ n, ≥ 2n) — never a global ntile sort.
@@ -2597,102 +2773,25 @@ def ccnet_doc_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket×dedup cross audit. Scores with the JM bigram LM since r14
     (VERDICT r13 #1); see the registered op's docstring for the
     integer micro-nat discipline."""
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.split(F.col("text"), " ").alias("toks"),
-        (
-            F.substring(F.md5(F.col("text").cast("binary")), 1, 2)
-            < _LM_TRAIN_HI
-        ).alias("is_train"),
-    )
     from presto_truffle_spark.cache import scoped_persist
 
-    d = scoped_persist(spark, "corpus.ccnet.d", d)
-    sz = F.size(F.col("toks"))
-    bigrams = F.zip_with(
-        F.slice(F.col("toks"), 1, sz - 1),
-        F.slice(F.col("toks"), 2, sz - 1),
-        lambda p, c: F.struct(p.alias("prev"), c.alias("cur")),
-    )
-    tr = d.filter("is_train")
-    tr_bi = (
-        tr.select(F.explode(bigrams).alias("b"))
-        .groupBy(
-            F.col("b.prev").alias("prev"), F.col("b.cur").alias("cur")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("cbi"))
-    )
-    tr_bi = scoped_persist(spark, "corpus.ccnet.trbi", tr_bi)
-    tr_ctx = tr_bi.groupBy("prev").agg(
-        F.sum("cbi").cast("long").alias("cprev")
-    )
-    tr_uni = (
-        tr.select(F.explode("toks").alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("cuni"))
-    )
-    tr_uni = scoped_persist(spark, "corpus.ccnet.truni", tr_uni)
-    tstat = tr_uni.agg(
-        F.sum("cuni").cast("long").alias("n"),
-        F.count(F.lit(1)).cast("long").alias("v"),
-    )
-    # Per-INSTANCE integer micro-nats (r14 fusion, value-identical to
-    # the per-class freeze: ln over identical integer inputs is
-    # deterministic, so every instance of a (cbi, cprev, cuni) class
-    # carries the same integer li, and the BIGINT per-doc fold is
-    # order-free — the class-distinct + rejoin machinery bought no
-    # extra determinism, only ~4 shuffles). Training counts are
-    # vocab²-bounded tables joined on their natural keys (AQE
-    # broadcasts the small sides) — never collected, never all-pairs.
-    doc_bi = d.select("doc_id", F.explode(bigrams).alias("b")).select(
-        "doc_id",
-        F.col("b.prev").alias("prev"),
-        F.col("b.cur").alias("cur"),
-    )
-    floor = (
-        F.lit(0.3)
-        * (F.coalesce("cuni", F.lit(0)) + 1)
-        / (F.col("n") + F.col("v") + F.lit(1.0))
-    )
-    bi_li = F.round(
-        F.log(
-            F.when(
-                F.coalesce("cprev", F.lit(0)) > 0,
-                F.lit(0.7)
-                * F.coalesce("cbi", F.lit(0))
-                / F.coalesce("cprev", F.lit(0)),
-            ).otherwise(F.lit(0.0))
-            + floor
-        )
-        * 1000000
-    ).cast("long")
+    c = _LMCounts(spark, sf_dir)
+    stats = F.broadcast(c.tstat)
+    doc_bi = c.d.select("doc_id", F.explode(c.bigrams).alias("g"))
     doc_bi_sum = (
-        doc_bi.join(tr_bi, ["prev", "cur"], "left")
-        .join(tr_ctx, "prev", "left")
-        .join(
-            tr_uni.select(F.col("tok").alias("cur"), "cuni"),
-            "cur",
-            "left",
-        )
-        .crossJoin(F.broadcast(tstat))
+        _lookup(doc_bi.select("doc_id", "g.prev", "g.cur"), *c.jm_tables)
+        .crossJoin(stats)
         .groupBy("doc_id")
         .agg(
-            F.sum(bi_li).cast("long").alias("sum_li"),
-            F.count(F.lit(1)).cast("long").alias("mb"),
+            F.sum(_micro_nats(_jm_bigram_p())).cast("long").alias("sum_li"),
+            _count("mb"),
         )
     )
-    fi_li = F.round(
-        F.log(
-            (F.coalesce("cuni", F.lit(0)) + 1)
-            / (F.col("n") + F.col("v") + F.lit(1.0))
-        )
-        * 1000000
-    ).cast("long")
+    first = c.d.select("doc_id", F.element_at("toks", 1).alias("tok"))
     scored = (
-        d.select("doc_id", F.element_at("toks", 1).alias("tok"))
-        .join(tr_uni, "tok", "left")
-        .crossJoin(F.broadcast(tstat))
-        .select("doc_id", fi_li.alias("fi_li"))
+        _lookup(first, c.tr_uni)
+        .crossJoin(stats)
+        .select("doc_id", _micro_nats(_add_one("cuni")).alias("fi_li"))
         .join(doc_bi_sum, "doc_id", "left")
         .select(
             "doc_id",
@@ -2713,7 +2812,7 @@ def ccnet_doc_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     withbw = scored.crossJoin(F.broadcast(bwq))
     hist = withbw.groupBy(
         (F.col("s") - F.col("s") % F.col("bw")).alias("vb")
-    ).agg(F.count(F.lit(1)).cast("long").alias("nb"))
+    ).agg(_count("nb"))
     cum = hist.select(
         "vb",
         F.sum("nb")
@@ -2721,7 +2820,7 @@ def ccnet_doc_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("cumn"),
     )
-    tot = scored.agg(F.count(F.lit(1)).cast("long").alias("nd"))
+    tot = scored.agg(_count("nd"))
     thr = cum.crossJoin(F.broadcast(tot)).agg(
         F.min(
             F.when(F.col("cumn") * 3 >= F.col("nd"), F.col("vb"))
@@ -2830,148 +2929,26 @@ def text_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     FIRST token scores under the pure unigram (no context — the
     convention is part of the contract and mirrored exactly).
 
-    Determinism: the ccnet/unigram micro-nat discipline generalized to
-    the bigram CLASS grid — eval bigram instances fold to exact
-    integer counts per (c_bi, c_prev, c_uni) triple (890 classes at
-    sf0.01, 920 at sf0.1 — bounded by bigram types, never corpus
-    volume), each class's log-prob frozen ONCE as integer micro-nats,
-    totals are exact BIGINT sums, ONE final division. Fixture honesty:
-    the synthetic token order is near-random, so bigram PPL 30.37 ≈
-    unigram 30.16 — the interpolation floor dominates; on real text
-    the bigram term is where the signal lives.
+    Classes (the `_LMCounts` discipline) are (c_bi, c_prev, c_uni)
+    triples: 890 at sf0.01, 920 at sf0.1 — bounded by bigram types,
+    never corpus volume. Fixture honesty: the synthetic token order is
+    near-random, so bigram PPL 30.37 ≈ unigram 30.16 — the
+    interpolation floor dominates; on real text the bigram term is
+    where the signal lives.
 
     Scale shape: train bigram/context/unigram counts are three
     map-combinable folds; eval folds join the (vocab²-bounded) count
     tables; nothing downstream of the folds is corpus-volume."""
-    d = load_table(spark, sf_dir, "documents").select(
-        F.split(F.col("text"), " ").alias("toks"),
-        (
-            F.substring(F.md5(F.col("text").cast("binary")), 1, 2)
-            < _LM_TRAIN_HI
-        ).alias("is_train"),
-    )
-    from presto_truffle_spark.cache import scoped_persist
-
-    d = scoped_persist(spark, "text.bilm.d", d)
-    sz = F.size(F.col("toks"))
-    bigrams = F.zip_with(
-        F.slice(F.col("toks"), 1, sz - 1),
-        F.slice(F.col("toks"), 2, sz - 1),
-        lambda p, c: F.struct(p.alias("prev"), c.alias("cur")),
-    )
-    tr_bi = (
-        d.filter("is_train")
-        .select(F.explode(bigrams).alias("b"))
-        .groupBy(
-            F.col("b.prev").alias("prev"), F.col("b.cur").alias("cur")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("cbi"))
-    )
-    tr_bi = scoped_persist(spark, "text.bilm.trbi", tr_bi)
-    tr_ctx = tr_bi.groupBy("prev").agg(
-        F.sum("cbi").cast("long").alias("cprev")
-    )
-    tr_uni = (
-        d.filter("is_train")
-        .select(F.explode("toks").alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("cuni"))
-    )
-    tr_uni = scoped_persist(spark, "text.bilm.truni", tr_uni)
-    tstat = tr_uni.agg(
-        F.sum("cuni").cast("long").alias("n"),
-        F.count(F.lit(1)).cast("long").alias("v"),
-    )
-    ev = d.filter(~F.col("is_train"))
-    ev_bi = (
-        ev.select(F.explode(bigrams).alias("b"))
-        .groupBy(
-            F.col("b.prev").alias("prev"), F.col("b.cur").alias("cur")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("m"))
-    )
-    ev_first = (
-        ev.filter(sz >= 1)
-        .select(F.element_at("toks", 1).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("m"))
-    )
-    bi_cls = (
-        ev_bi.join(tr_bi, ["prev", "cur"], "left")
-        .join(tr_ctx, "prev", "left")
-        .join(
-            tr_uni.select(F.col("tok").alias("cur"), "cuni"),
-            "cur",
-            "left",
-        )
-        .groupBy(
-            F.coalesce("cbi", F.lit(0)).alias("cbi"),
-            F.coalesce("cprev", F.lit(0)).alias("cprev"),
-            F.coalesce("cuni", F.lit(0)).alias("cuni"),
-        )
-        .agg(F.sum("m").cast("long").alias("m"))
-    )
-    fi_cls = (
-        ev_first.join(tr_uni, "tok", "left")
-        .groupBy(F.coalesce("cuni", F.lit(0)).alias("cuni"))
-        .agg(F.sum("m").cast("long").alias("m"))
-    )
-    floor = (
-        F.lit(0.3)
-        * (F.col("cuni") + 1)
-        / (F.col("n") + F.col("v") + F.lit(1.0))
-    )
-    bi_li = bi_cls.crossJoin(F.broadcast(tstat)).select(
-        "m",
-        F.round(
-            F.log(
-                F.when(
-                    F.col("cprev") > 0,
-                    F.lit(0.7) * F.col("cbi") / F.col("cprev"),
-                ).otherwise(F.lit(0.0))
-                + floor
-            )
-            * 1000000
-        )
-        .cast("long")
-        .alias("li"),
-    )
-    fi_li = fi_cls.crossJoin(F.broadcast(tstat)).select(
-        "m",
-        F.round(
-            F.log(
-                (F.col("cuni") + 1)
-                / (F.col("n") + F.col("v") + F.lit(1.0))
-            )
-            * 1000000
-        )
-        .cast("long")
-        .alias("li"),
-    )
-    s_bi = bi_li.agg(
-        F.sum("m").cast("long").alias("m_bi"),
-        F.sum(F.col("m") * F.col("li")).cast("long").alias("sl_bi"),
-        F.count(F.lit(1)).cast("long").alias("n_bi_classes"),
-    )
-    s_fi = fi_li.agg(
-        F.sum("m").cast("long").alias("m_fi"),
-        F.sum(F.col("m") * F.col("li")).cast("long").alias("sl_fi"),
-    )
-    mt = (F.col("m_bi") + F.col("m_fi")) * F.lit(1000000.0)
-    avg = (F.col("sl_bi") + F.col("sl_fi")) * 1.0 / F.nullif(
-        mt, F.lit(0.0)
-    )
-    return (
-        s_bi.crossJoin(F.broadcast(s_fi))
-        .crossJoin(F.broadcast(tstat))
-        .select(
-            F.col("n").alias("train_tokens"),
-            F.col("v").alias("train_vocab"),
-            (F.col("m_bi") + F.col("m_fi")).alias("eval_tokens"),
-            "n_bi_classes",
-            F.round(avg, 6).alias("avg_logprob"),
-            F.round(F.exp(-avg), 6).alias("perplexity"),
-        )
+    c = _LMCounts(spark, sf_dir)
+    return _perplexity(
+        c.tstat,
+        _classes(c.ev_bi, *c.jm_tables),
+        _jm_bigram_p(),
+        "n_bi_classes",
+        _classes(c.head(1), c.tr_uni),
+        _add_one("cuni"),
+        F.col("n").alias("train_tokens"),
+        F.col("v").alias("train_vocab"),
     )
 
 
@@ -3072,139 +3049,28 @@ def text_kn_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     under pure p_cont; each doc's first token likewise (the family's
     boundary convention).
 
-    Determinism: the micro-nat class-grid discipline over
-    (c_bi, c_prev, N1+(prev·), N1+(·cur)) integer tuples — all four
-    are exact counts off ONE bigram-type table; each class's log-prob
-    frozen once as integer micro-nats; exact BIGINT totals; one final
-    division. Scale shape: one bigram fold feeds every statistic
-    (context sums, continuation counts, the type total B); eval folds
-    join it on grouped n-gram keys — nothing downstream of the folds
-    is corpus-volume."""
-    d = load_table(spark, sf_dir, "documents").select(
-        F.split(F.col("text"), " ").alias("toks"),
-        (
-            F.substring(F.md5(F.col("text").cast("binary")), 1, 2)
-            < _LM_TRAIN_HI
-        ).alias("is_train"),
-    )
-    from presto_truffle_spark.cache import scoped_persist
-
-    d = scoped_persist(spark, "text.knlm.d", d)
-    sz = F.size(F.col("toks"))
-    bigrams = F.zip_with(
-        F.slice(F.col("toks"), 1, sz - 1),
-        F.slice(F.col("toks"), 2, sz - 1),
-        lambda p, c: F.struct(p.alias("prev"), c.alias("cur")),
-    )
-    tr_bi = (
-        d.filter("is_train")
-        .filter(sz >= 2)
-        .select(F.explode(bigrams).alias("b"))
-        .groupBy(
-            F.col("b.prev").alias("prev"), F.col("b.cur").alias("cur")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("cbi"))
-    )
-    tr_bi = scoped_persist(spark, "text.knlm.trbi", tr_bi)
-    tr_ctx = tr_bi.groupBy("prev").agg(
-        F.sum("cbi").cast("long").alias("cprev"),
-        F.count(F.lit(1)).cast("long").alias("n1p"),
-    )
-    tr_cont = tr_bi.groupBy("cur").agg(
-        F.count(F.lit(1)).cast("long").alias("n1m")
-    )
-    bstat = tr_bi.agg(F.count(F.lit(1)).cast("long").alias("bt"))
-    tstat = (
-        d.filter("is_train")
-        .select(F.explode("toks").alias("tok"))
-        .agg(F.countDistinct("tok").cast("long").alias("v"))
-    )
-    ev = d.filter(~F.col("is_train"))
-    ev_bi = (
-        ev.filter(sz >= 2)
-        .select(F.explode(bigrams).alias("b"))
-        .groupBy(
-            F.col("b.prev").alias("prev"), F.col("b.cur").alias("cur")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("m"))
-    )
-    ev_first = (
-        ev.filter(sz >= 1)
-        .select(F.element_at("toks", 1).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("m"))
-    )
-    bi_cls = (
-        ev_bi.join(tr_bi, ["prev", "cur"], "left")
-        .join(tr_ctx, "prev", "left")
-        .join(
-            tr_cont.select(F.col("cur"), "n1m"),
-            "cur",
-            "left",
-        )
-        .groupBy(
-            F.coalesce("cbi", F.lit(0)).alias("cbi"),
-            F.coalesce("cprev", F.lit(0)).alias("cprev"),
-            F.coalesce("n1p", F.lit(0)).alias("n1p"),
-            F.coalesce("n1m", F.lit(0)).alias("n1m"),
-        )
-        .agg(F.sum("m").cast("long").alias("m"))
-    )
-    fi_cls = (
-        ev_first.join(
-            tr_cont.select(F.col("cur").alias("tok"), "n1m"),
-            "tok",
-            "left",
-        )
-        .groupBy(F.coalesce("n1m", F.lit(0)).alias("n1m"))
-        .agg(F.sum("m").cast("long").alias("m"))
-    )
+    Classes (the `_LMCounts` discipline) are (c_bi, c_prev, N1+(prev·),
+    N1+(·cur)) tuples — all four exact counts off ONE bigram-type
+    table. Scale shape: one bigram fold feeds every statistic (context
+    sums, continuation counts, the type total B); eval folds join it on
+    grouped n-gram keys — nothing downstream of the folds is
+    corpus-volume."""
+    c = _LMCounts(spark, sf_dir)
     pc = (F.col("n1m") + 1) / (F.col("bt") + F.col("v") + F.lit(1.0))
     p = F.when(
         F.col("cprev") > 0,
-        F.greatest(F.col("cbi") - F.lit(0.75), F.lit(0.0))
-        / F.col("cprev")
+        F.greatest(F.col("cbi") - F.lit(0.75), F.lit(0.0)) / F.col("cprev")
         + F.lit(0.75) * F.col("n1p") / F.col("cprev") * pc,
     ).otherwise(pc)
-    bi_li = (
-        bi_cls.crossJoin(F.broadcast(bstat))
-        .crossJoin(F.broadcast(tstat))
-        .select(
-            "m", F.round(F.log(p) * 1000000).cast("long").alias("li")
-        )
-    )
-    fi_li = (
-        fi_cls.crossJoin(F.broadcast(bstat))
-        .crossJoin(F.broadcast(tstat))
-        .select(
-            "m", F.round(F.log(pc) * 1000000).cast("long").alias("li")
-        )
-    )
-    s_bi = bi_li.agg(
-        F.sum("m").cast("long").alias("m_bi"),
-        F.sum(F.col("m") * F.col("li")).cast("long").alias("sl_bi"),
-        F.count(F.lit(1)).cast("long").alias("n_kn_classes"),
-    )
-    s_fi = fi_li.agg(
-        F.sum("m").cast("long").alias("m_fi"),
-        F.sum(F.col("m") * F.col("li")).cast("long").alias("sl_fi"),
-    )
-    mt = (F.col("m_bi") + F.col("m_fi")) * F.lit(1000000.0)
-    avg = (F.col("sl_bi") + F.col("sl_fi")) * 1.0 / F.nullif(
-        mt, F.lit(0.0)
-    )
-    return (
-        s_bi.crossJoin(F.broadcast(s_fi))
-        .crossJoin(F.broadcast(bstat))
-        .crossJoin(F.broadcast(tstat))
-        .select(
-            F.col("bt").alias("train_bigram_types"),
-            F.col("v").alias("train_vocab"),
-            (F.col("m_bi") + F.col("m_fi")).alias("eval_tokens"),
-            "n_kn_classes",
-            F.round(avg, 6).alias("avg_logprob"),
-            F.round(F.exp(-avg), 6).alias("perplexity"),
-        )
+    return _perplexity(
+        c.tr_bi.agg(_count("bt")).crossJoin(c.tstat),
+        _classes(c.ev_bi, c.tr_bi, c.tr_ctx, c.tr_cont),
+        p,
+        "n_kn_classes",
+        _classes(c.head(1), c.tr_cont.withColumnRenamed("cur", "tok")),
+        pc,
+        F.col("bt").alias("train_bigram_types"),
+        F.col("v").alias("train_vocab"),
     )
 
 
@@ -3318,29 +3184,14 @@ def text_trigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     family's fixture-honesty note, now with the structured twin
     recorded.
 
-    Determinism: the micro-nat class-grid discipline, one order
-    higher — eval trigram instances fold to exact integer counts per
-    (c3, h2, c2, h1, c1) tuple, each tuple's log-prob frozen ONCE as
-    integer micro-nats, exact BIGINT totals, ONE final division. The
-    class grid is bounded by distinct EVAL TRIGRAM TYPES (≤ vocab³ but
-    in practice the Heaps-law trigram vocabulary), never by corpus
-    volume; all five count lookups are plain equi-joins on n-gram keys
-    (grouped eval side ⇒ ≤1 row per key — no hot-token skew like the
-    tfidf df join).
+    Classes (the `_LMCounts` discipline) are (c3, h2, c2, h1, c1)
+    tuples, bounded by distinct EVAL TRIGRAM TYPES (≤ vocab³ but in
+    practice the Heaps-law trigram vocabulary), never by corpus volume.
 
     Scale shape: three map-combinable train folds + two eval folds;
     everything downstream of the folds is n-gram-type-sized."""
-    d = load_table(spark, sf_dir, "documents").select(
-        F.split(F.col("text"), " ").alias("toks"),
-        (
-            F.substring(F.md5(F.col("text").cast("binary")), 1, 2)
-            < _LM_TRAIN_HI
-        ).alias("is_train"),
-    )
-    from presto_truffle_spark.cache import scoped_persist
-
-    d = scoped_persist(spark, "text.trilm.d", d)
-    sz = F.size(F.col("toks"))
+    c = _LMCounts(spark, sf_dir)
+    sz = F.size("toks")
     tris = F.transform(
         F.sequence(F.lit(1), sz - 2),
         lambda i: F.struct(
@@ -3349,157 +3200,36 @@ def text_trigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.element_at("toks", i + 2).alias("w3"),
         ),
     )
-    bigrams = F.zip_with(
-        F.slice(F.col("toks"), 1, sz - 1),
-        F.slice(F.col("toks"), 2, sz - 1),
-        lambda p, c: F.struct(p.alias("prev"), c.alias("cur")),
-    )
+
     # Spark's sequence(1, sz-2) DESCENDS for sz < 3 (DuckDB's
     # generate_series is empty) — the sz >= 3 filter keeps the
     # engines' trigram sets identical.
-    tr = d.filter("is_train")
-    tr_tri = (
-        tr.filter(sz >= 3)
-        .select(F.explode(tris).alias("t"))
-        .groupBy(
-            F.col("t.w1").alias("w1"),
-            F.col("t.w2").alias("w2"),
-            F.col("t.w3").alias("w3"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("c3"))
-    )
-    tr_bi = (
-        tr.filter(sz >= 2)
-        .select(F.explode(bigrams).alias("b"))
-        .groupBy(
-            F.col("b.prev").alias("prev"), F.col("b.cur").alias("cur")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("cbi"))
-    )
-    tr_bi = scoped_persist(spark, "text.trilm.trbi", tr_bi)
-    tr_uni = (
-        tr.select(F.explode("toks").alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("cuni"))
-    )
-    tr_uni = scoped_persist(spark, "text.trilm.truni", tr_uni)
-    tstat = tr_uni.agg(
-        F.sum("cuni").cast("long").alias("n"),
-        F.count(F.lit(1)).cast("long").alias("v"),
-    )
-    ev = d.filter(~F.col("is_train"))
-    ev_tri = (
-        ev.filter(sz >= 3)
-        .select(F.explode(tris).alias("t"))
-        .groupBy(
-            F.col("t.w1").alias("w1"),
-            F.col("t.w2").alias("w2"),
-            F.col("t.w3").alias("w3"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("m"))
-    )
-    ev_head = (
-        ev.select(
-            F.explode(
-                F.slice(F.col("toks"), 1, F.least(F.lit(2), sz))
-            ).alias("tok")
-        )
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("m"))
-    )
-    tri_cls = (
-        ev_tri.join(tr_tri, ["w1", "w2", "w3"], "left")
-        .join(
-            tr_bi.select(
-                F.col("prev").alias("w1"),
-                F.col("cur").alias("w2"),
-                F.col("cbi").alias("h2_"),
-            ),
-            ["w1", "w2"],
-            "left",
-        )
-        .join(
-            tr_bi.select(
-                F.col("prev").alias("w2"),
-                F.col("cur").alias("w3"),
-                F.col("cbi").alias("c2_"),
-            ),
-            ["w2", "w3"],
-            "left",
-        )
-        .join(
-            tr_uni.select(F.col("tok").alias("w2"), F.col("cuni").alias("h1_")),
-            "w2",
-            "left",
-        )
-        .join(
-            tr_uni.select(F.col("tok").alias("w3"), F.col("cuni").alias("c1_")),
-            "w3",
-            "left",
-        )
-        .groupBy(
-            F.coalesce("c3", F.lit(0)).alias("c3"),
-            F.coalesce("h2_", F.lit(0)).alias("h2"),
-            F.coalesce("c2_", F.lit(0)).alias("c2"),
-            F.coalesce("h1_", F.lit(0)).alias("h1"),
-            F.coalesce("c1_", F.lit(0)).alias("c1"),
-        )
-        .agg(F.sum("m").cast("long").alias("m"))
-    )
-    hd_cls = (
-        ev_head.join(tr_uni, "tok", "left")
-        .groupBy(F.coalesce("cuni", F.lit(0)).alias("c1"))
-        .agg(F.sum("m").cast("long").alias("m"))
-    )
+    def trigrams(rows, count):
+        return _fold(rows.filter(sz >= 3), tris, count, ("w1", "w2", "w3"))
+
     p = (
-        F.when(
-            F.col("h2") > 0, F.lit(0.5) * F.col("c3") / F.col("h2")
-        ).otherwise(F.lit(0.0))
-        + F.when(
-            F.col("h1") > 0, F.lit(0.3) * F.col("c2") / F.col("h1")
-        ).otherwise(F.lit(0.0))
-        + F.lit(0.2)
-        * (F.col("c1") + 1)
-        / (F.col("n") + F.col("v") + F.lit(1.0))
+        F.when(F.col("h2") > 0, F.lit(0.5) * F.col("c3") / F.col("h2"))
+        .otherwise(F.lit(0.0))
+        + F.when(F.col("h1") > 0, F.lit(0.3) * F.col("c2") / F.col("h1"))
+        .otherwise(F.lit(0.0))
+        + F.lit(0.2) * (F.col("c1") + 1) / _add_one_den()
     )
-    tri_li = tri_cls.crossJoin(F.broadcast(tstat)).select(
-        "m", F.round(F.log(p) * 1000000).cast("long").alias("li")
-    )
-    hd_li = hd_cls.crossJoin(F.broadcast(tstat)).select(
-        "m",
-        F.round(
-            F.log(
-                (F.col("c1") + 1) / (F.col("n") + F.col("v") + F.lit(1.0))
-            )
-            * 1000000
-        )
-        .cast("long")
-        .alias("li"),
-    )
-    s_tri = tri_li.agg(
-        F.sum("m").cast("long").alias("m_tri"),
-        F.sum(F.col("m") * F.col("li")).cast("long").alias("sl_tri"),
-        F.count(F.lit(1)).cast("long").alias("n_tri_classes"),
-    )
-    s_hd = hd_li.agg(
-        F.sum("m").cast("long").alias("m_hd"),
-        F.sum(F.col("m") * F.col("li")).cast("long").alias("sl_hd"),
-    )
-    mt = (F.col("m_tri") + F.col("m_hd")) * F.lit(1000000.0)
-    avg = (F.col("sl_tri") + F.col("sl_hd")) * 1.0 / F.nullif(
-        mt, F.lit(0.0)
-    )
-    return (
-        s_tri.crossJoin(F.broadcast(s_hd))
-        .crossJoin(F.broadcast(tstat))
-        .select(
-            F.col("n").alias("train_tokens"),
-            F.col("v").alias("train_vocab"),
-            (F.col("m_tri") + F.col("m_hd")).alias("eval_tokens"),
-            "n_tri_classes",
-            F.round(avg, 6).alias("avg_logprob"),
-            F.round(F.exp(-avg), 6).alias("perplexity"),
-        )
+    return _perplexity(
+        c.tstat,
+        _classes(
+            trigrams(c.held_out, "m"),
+            trigrams(c.train, "c3"),
+            c.tr_bi.toDF("w1", "w2", "h2"),
+            c.tr_bi.toDF("w2", "w3", "c2"),
+            c.tr_uni.toDF("w2", "h1"),
+            c.tr_uni.toDF("w3", "c1"),
+        ),
+        p,
+        "n_tri_classes",
+        _classes(c.head(2), c.tr_uni.toDF("tok", "c1")),
+        _add_one("c1"),
+        F.col("n").alias("train_tokens"),
+        F.col("v").alias("train_vocab"),
     )
 
 

@@ -124,78 +124,16 @@ def load_all_modules() -> None:
 # green (the driver re-verified the staled code); until then it heads
 # the window. A further code change bumps the number by hand.
 _FORCE_HEAD: dict[str, int] = {
-    # (The r17 pins — agg_welch_ttest, agg_oneway_anova,
-    # quality_t_closeness — re-greened in CORRECTNESS_r17 and were
-    # pruned per the keep-it-short rule; dedup_minhash_estimator_error's
-    # r17 oracle edit also landed green in CORRECTNESS_r17's own sample,
-    # so it needs no pin.)
-    #
-    # r18 pins (VERDICT r17 item 1): every key whose Spark code or
-    # oracle SQL changed in the r17 optimization round but which did
-    # NOT land in the driver's r17 50-key sample — their correctness
-    # currently rests on the builder's selfcheck only. Computed by
-    # diffing the registered oracle strings and @query function blocks
-    # between 64b436a (r16 close) and the r17 close, minus the four
-    # keys CORRECTNESS_r17 already shows green. Staled at 17: the r17
-    # ledger predates/coincides with the change, so only a LATER green
-    # row unpins.
-    "corpus_bucket_dedup_cross": 17,
-    "corpus_dedup_aware_split": 17,
-    "dedup_canonical_selection": 17,
-    "dedup_connected_components": 17,
-    "dedup_incremental_minhash": 17,
-    "dedup_lsh_bucket_guard": 17,
-    # r18 change: shares the memoized signature table (see _lsh_tables).
-    "dedup_minhash_estimator_error": 17,
-    # r18 change: grouped-map/mapInArrow split demonstration (VERDICT #9).
-    "udf_grouped_map_zscore": 17,
-    # r18 rewrites: single-scan window shapes (rescan audit, VERDICT #4).
-    "events_funnel_conversion": 17,
-    "events_asof_nearest": 17,
-    "events_rank_migration": 17,
-    "events_autocorrelation": 17,
-    "events_cohort_ltv_curve": 17,
-    "events_changepoint_cusum": 17,
-    "events_session_gap_sweep": 17,
-    # r18 change: size-derived state-store partition count (the 14
-    # streams whose effective shuffle-partition count moved 8 → 2 at
-    # fixture scale; values are partition-independent, which these pins
-    # make the driver's oracle confirm). The python-stateful streams
-    # keep their floor of 8 — behavior unchanged, not pinned.
-    "streaming_tumbling_counts": 17,
-    "streaming_windowed_watermark": 17,
-    "streaming_dedup_watermark": 17,
-    "streaming_session_window": 17,
-    "streaming_rate_ingest": 17,
-    "streaming_stream_stream_join": 17,
-    "streaming_stream_static_join": 17,
-    "streaming_stream_stream_left_join": 17,
-    "streaming_range_join_windows": 17,
-    "streaming_semantic_dedup": 17,
-    "streaming_semantic_dedup_indexed": 17,
-    "streaming_decayed_counts": 17,
-    "streaming_seasonal_anomaly": 17,
-    "streaming_gdpr_erasure_filter": 17,
-    "dedup_minhash_lsh": 17,
-    "dedup_minhash_lsh_capped": 17,
-    "dedup_snm_multipass": 17,
-    "dedup_sorted_neighborhood": 17,
-    "dedup_survivor_pick": 17,
-    "embedding_jl_projection": 17,
-    "events_anomaly_mad": 17,
-    "events_asof_join": 17,
-    "events_peak_concurrency": 17,
-    "graph_degree_assortativity": 17,
-    "graph_label_propagation": 17,
-    "graph_pagerank": 17,
-    "graph_triangle_count": 17,
-    "pipeline_corpus_prep": 17,
-    "pipeline_corpus_release": 17,
-    "pipeline_semantic_dedup": 17,
-    "pipeline_semantic_dedup_capped": 17,
-    "search_mmr_diversify": 17,
-    "source_python_datasource": 17,
-    "text_tfidf_top_terms": 17,
+    # The 49 r17/r18 pins all re-greened in CORRECTNESS_r18 and were
+    # pruned. Staled at 18: the language-model family now shares one
+    # count builder (operators/text.py `_LMCounts`), including the ccnet
+    # scorer under the bucket×dedup cross audit.
+    "text_unigram_lm_perplexity": 18,
+    "corpus_ccnet_quality_buckets": 18,
+    "text_bigram_lm_perplexity": 18,
+    "text_kn_bigram_perplexity": 18,
+    "text_trigram_lm_perplexity": 18,
+    "corpus_bucket_dedup_cross": 18,
 }
 
 _WINDOW = 50

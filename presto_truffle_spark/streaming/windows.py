@@ -119,8 +119,8 @@ def stream_shuffle_partitions(
     sizing to its own throughput). Measured at sf0.01: 8 stores → 2
     cuts the per-key micro-batch wall ~10-25% (store setup dominates
     tiny batches; values are partition-count-independent, which the
-    oracle and the CPUS=7 layout gate verify). Overridable via
-    SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS for cluster experiments.
+    oracle and the CPUS=7 layout gate verify). There is no override:
+    the count follows the input.
 
     ``python_stateful`` keeps a floor of 8: for applyInPandasWithState /
     transformWithStateInPandas / Python-source streams the partition
@@ -128,9 +128,6 @@ def stream_shuffle_partitions(
     compute, and the measured A/B shows the store saving is dwarfed by
     serializing the Python work (transform_with_state 2.3 s at 8
     partitions → 7.0 s at 2)."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-    if env:
-        return int(env)
     floor = 8 if python_stateful else 2
     if sf_dir is None:
         # Non-file sources (rate / python datasource) generate KBs per

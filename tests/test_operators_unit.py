@@ -862,3 +862,22 @@ def test_oneway_anova_hand_example(spark, tmp_path):
     assert r["grand_mean"] == 4.0
     assert r["f_stat"] == 21.0
     assert r["eta_sq"] == 0.875
+
+
+def test_grouped_map_zscore_on_int32_keys(spark, sf_dir, tmp_path):
+    """An orders file written with int32 keys runs through both z-score
+    paths and yields the same rows and types as the int64 fixture."""
+    from presto_truffle_spark.operators.coverage_extras import (
+        udf_grouped_map_zscore,
+    )
+
+    spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+        F.col("o_custkey").cast("int").alias("o_custkey"),
+        F.col("o_orderkey").cast("int").alias("o_orderkey"),
+        "o_totalprice",
+    ).write.parquet(str(tmp_path / "orders.parquet"))
+    got = udf_grouped_map_zscore(spark, str(tmp_path))
+    want = udf_grouped_map_zscore(spark, sf_dir)
+    assert got.dtypes == want.dtypes
+    rows = sorted(want.collect())
+    assert rows and sorted(got.collect()) == rows

@@ -139,8 +139,9 @@ def unigram_doc_tertiles(spark, sf_dir: str):
 def bigram_doc_tertiles(spark, sf_dir: str):
     """Per-doc Jelinek-Mercer bigram NLL → exact-percentile tertiles
     (doc_id, bucket). Same mixture as text_bigram_lm_perplexity
-    (0.7 bigram MLE + 0.3 add-one unigram, text.py:2663), scored per
-    DOCUMENT; floats are fine study-side (no oracle hash)."""
+    (0.7 bigram MLE + 0.3 add-one unigram, `_jm_bigram_p` in
+    operators/text.py), scored per DOCUMENT; floats are fine study-side
+    (no oracle hash)."""
     from presto_truffle_spark.catalog import load_table
     from presto_truffle_spark.operators.text import _LM_TRAIN_HI
 

@@ -31,6 +31,8 @@ import os
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
+from presto_truffle_spark.catalog import file_stats
+
 # site -> (applicationId, cached frame)
 _LIVE: dict[str, tuple[str, DataFrame]] = {}
 
@@ -61,10 +63,4 @@ def input_bytes(sf_dir: str, table: str) -> int:
     Driver-side stat only — used to gate cache-vs-recompute decisions
     that are scale-dependent (BASELINE.md r5 tfidf note)."""
     path = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            total += os.path.getsize(os.path.join(root, f))
-    return total
+    return sum(size for _, _, size in file_stats(path))

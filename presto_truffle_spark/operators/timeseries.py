@@ -1008,6 +1008,12 @@ def events_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Persist the autocorrelation day fold only when the on-disk events are at
+# least this large; the same crossover reasoning as text.py's
+# _TFIDF_PERSIST_MIN_BYTES.
+_AUTOCORR_PERSIST_MIN_BYTES = 256 << 20
+
+
 @query(
     "events_autocorrelation",
     oracle="""
@@ -1049,26 +1055,31 @@ def events_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     trunc_ntz), then all seven lags come from ONE self-join of that
     calendar-bounded table against the 7-row lag list — never seven
     corpus passes, and never a window per lag. Everything after the
-    first fold is ~30x7 rows."""
-    from presto_truffle_spark.cache import scoped_persist
+    first fold is ~30x7 rows.
+
+    The lag self-join consumes the day fold on BOTH sides, so without a
+    cache each side re-runs the corpus scan + day fold (r18 rescan
+    audit). The fold is persisted only at or above
+    ``_AUTOCORR_PERSIST_MIN_BYTES`` of on-disk events: below it the two
+    scans run in parallel on idle cores and the per-invocation cache
+    build is the slower path (+1.6 s sf0.1 median, VERDICT r18); at
+    scale the persist deletes a corpus scan. Both plan shapes are pinned
+    (tests/test_plans_r18.py)."""
+    from presto_truffle_spark.cache import input_bytes, scoped_persist
     from presto_truffle_spark.tztime import trunc_ntz
 
     ev = load_table(spark, sf_dir, "events")
-    daily = scoped_persist(
-        spark,
-        "timeseries.autocorr.daily",
-        # Persisted: the lag self-join consumes this calendar-bounded
-        # fold on BOTH sides, and without the cache each side re-ran
-        # the corpus scan + day fold (r18 rescan audit; the r5
-        # reduced-intermediate rule — the day table is ~30 rows).
+    daily = (
         ev.select(
             (epoch_s(trunc_ntz("day", "ts")) / 86400)
             .cast("long")
             .alias("d")
         )
         .groupBy("d")
-        .agg(F.count(F.lit(1)).cast("long").alias("y")),
+        .agg(F.count(F.lit(1)).cast("long").alias("y"))
     )
+    if input_bytes(sf_dir, "events") >= _AUTOCORR_PERSIST_MIN_BYTES:
+        daily = scoped_persist(spark, "timeseries.autocorr.daily", daily)
     lags = spark.range(1).select(
         F.explode(
             F.array(*[F.lit(i) for i in range(1, 8)])

@@ -31,7 +31,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from presto_truffle_spark.catalog import load_table
+from presto_truffle_spark.catalog import load_table, read_parquet
 from presto_truffle_spark.plans.rewrites import broadcast_if_dim
 from presto_truffle_spark.registry import query
 
@@ -65,7 +65,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # path is treated as a directory by the file stream source, and the
     # fixture is a single file.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     stream = (
         spark.readStream.schema(raw_schema)
         .format("parquet")
@@ -710,7 +710,7 @@ def streaming_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ev").alias("ev_a"), F.col("nrm").alias("nrm_a"),
         )
     )
-    raw_schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
+    raw_schema = read_parquet(spark, f"{sf_dir}/embeddings.parquet").schema
     incoming = (
         spark.readStream.schema(raw_schema)
         .format("parquet")
@@ -827,7 +827,7 @@ def streaming_semantic_dedup_indexed(spark: SparkSession, sf_dir: str) -> DataFr
     )
     corpus_index = spark.read.parquet(index_path)
     # ----- SERVE: the stream probes the index files -----
-    raw_schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
+    raw_schema = read_parquet(spark, f"{sf_dir}/embeddings.parquet").schema
     incoming = (
         spark.readStream.schema(raw_schema)
         .format("parquet")

@@ -69,11 +69,12 @@ def test_grouped_map_split_paths(spark, sf_dir):
     assert "MapInArrow" in plan or "PythonMapInArrow" in plan, plan
 
 
-def test_rescan_audit_r18_single_scan_rewrites(spark, sf_dir):
+def test_rescan_audit_r18_single_scan_rewrites(spark, sf_dir, monkeypatch):
     """The five r18 rescan-audit rewrites each read events exactly once
     (changepoint/cohort/rank/gap-sweep: windows replaced the self-join /
-    separate-aggregate second scan; autocorrelation: the day fold is
-    persisted so the lag self-join probes the cache)."""
+    separate-aggregate second scan; autocorrelation: past its size gate
+    the day fold is persisted so the lag self-join probes the cache)."""
+    from presto_truffle_spark.operators import timeseries
     from presto_truffle_spark.operators.timeseries import (
         events_autocorrelation,
         events_cohort_ltv_curve,
@@ -84,6 +85,7 @@ def test_rescan_audit_r18_single_scan_rewrites(spark, sf_dir):
         events_session_gap_sweep,
     )
 
+    monkeypatch.setattr(timeseries, "_AUTOCORR_PERSIST_MIN_BYTES", 0)
     for fn, max_joins in (
         (events_changepoint_cusum, 0),
         (events_cohort_ltv_curve, 0),
@@ -96,3 +98,24 @@ def test_rescan_audit_r18_single_scan_rewrites(spark, sf_dir):
         assert len(scans) == 1, (fn.__name__, scans)
         plan = inspect.physical_plan(df)
         assert plan.count("Join") <= max_joins, (fn.__name__, plan)
+    spark.catalog.clearCache()
+
+
+def test_autocorrelation_persist_gate(spark, sf_dir, monkeypatch):
+    """Below _AUTOCORR_PERSIST_MIN_BYTES (every fixture) the day fold is
+    NOT persisted: no InMemoryTableScan, and each side of the lag
+    self-join folds its own events scan. Past the gate the fold is
+    cached (the pin above). Both shapes return the same rows."""
+    from presto_truffle_spark.operators import timeseries
+
+    spark.catalog.clearCache()
+    df = timeseries.events_autocorrelation(spark, sf_dir)
+    plan = inspect.physical_plan(df)
+    assert "InMemoryTableScan" not in plan, plan
+    assert len(inspect.parquet_scans(df)) == 2
+    gated = sorted(map(tuple, df.collect()))
+    monkeypatch.setattr(timeseries, "_AUTOCORR_PERSIST_MIN_BYTES", 0)
+    df = timeseries.events_autocorrelation(spark, sf_dir)
+    assert "InMemoryTableScan" in inspect.physical_plan(df)
+    assert sorted(map(tuple, df.collect())) == gated
+    spark.catalog.clearCache()

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from presto_truffle_spark.cache import scoped_persist
 from presto_truffle_spark.catalog import load_table
+from presto_truffle_spark.operators import grid
 from presto_truffle_spark.registry import query
 
 
@@ -745,8 +746,6 @@ def agg_listagg_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic listagg bug — '13011' < '7671' lexicographically — and the
     first draft hit exactly that fork). One window
     shuffle on the priority + one 5-group fold."""
-    from pyspark.sql.window import Window
-
     o = load_table(spark, sf_dir, "orders")
     top3 = (
         o.select(
@@ -754,7 +753,7 @@ def agg_listagg_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey",
             F.row_number()
             .over(
-                Window.partitionBy("o_orderpriority").orderBy(
+                W.partitionBy("o_orderpriority").orderBy(
                     F.col("o_totalprice").desc(), F.col("o_orderkey")
                 )
             )
@@ -892,22 +891,9 @@ def agg_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~1.7e20 at 1.5M customers), so the product sum accumulates in
     DECIMAL(38,0) — mirroring agg_spearman_correlation's sxy handling —
     while DuckDB widens the same sum to HUGEINT natively."""
-    from pyspark.sql.window import Window
-
-    per_cust = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
-    )
-    ranked = per_cust.select(
+    ranked = grid.customer_cents(spark, sf_dir).select(
         "cents",
-        F.row_number()
-        .over(Window.orderBy("cents", "o_custkey"))
-        .alias("r"),
+        F.row_number().over(W.orderBy("cents", "o_custkey")).alias("r"),
     )
     s = ranked.agg(
         F.count(F.lit(1)).alias("n"),
@@ -986,47 +972,16 @@ def agg_gini_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata scale, never corpus scale. Contrast the exact op, whose
     rank window single-partitions the full customer list; this is the
     one you run at 100 TB."""
-    per_cust = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
+    per_cust = scoped_persist(
+        spark, "agg.ginibkt.percust", grid.customer_cents(spark, sf_dir)
     )
-    from presto_truffle_spark.cache import scoped_persist
-
-    per_cust = scoped_persist(spark, "agg.ginibkt.percust", per_cust)
-    bw_df = per_cust.agg(
-        F.expr("max(cents) DIV 10000 + 1").cast("long").alias("bw")
-    )
-    hist = (
-        per_cust.crossJoin(F.broadcast(bw_df))
-        .groupBy(
-            "bw",
-            (F.col("cents") - F.col("cents") % F.col("bw")).alias("v"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("nb"))
-    )
-    from pyspark.sql.window import Window
-
-    cprev = F.coalesce(
-        F.sum("nb").over(
-            Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-        ),
-        F.lit(0),
-    )
-    cum = hist.select("bw", "v", "nb", cprev.alias("cprev"))
-    s = cum.agg(
+    s = grid.ranked(grid.histogram(per_cust, "cents")).agg(
         F.min("bw").cast("long").alias("bucket_width"),
         F.sum("nb").cast("long").alias("n"),
         F.count(F.lit(1)).cast("long").alias("n_buckets"),
         F.sum(F.col("nb") * F.col("v")).cast("long").alias("sx"),
         F.sum(
-            F.col("v").cast("decimal(38,0)")
-            * F.col("nb")
-            * (2 * F.col("cprev") + F.col("nb") + 1)
+            F.col("v").cast("decimal(38,0)") * F.col("nb") * F.col("r2")
         ).alias("srx2"),
     )
     return s.select(
@@ -2244,19 +2199,7 @@ def agg_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rank + per-value tie counts share it) + map-combinable folds —
     at 100 TB the global sort is the cost, same as any exact ranking;
     the bucketed-quantile approximation is the swap-in."""
-    od = load_table(spark, sf_dir, "orders")
-    cu = load_table(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment").isin("AUTOMOBILE", "BUILDING")
-    )
-    t = od.join(cu, od.o_custkey == cu.c_custkey).select(
-        F.when(F.col("c_mktsegment") == "AUTOMOBILE", 1)
-        .otherwise(0)
-        .alias("grp"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    from presto_truffle_spark.cache import scoped_persist
-
-    t = scoped_persist(spark, "agg.mwu.t", t)
+    t = scoped_persist(spark, "agg.mwu.t", grid.segment_cents(spark, sf_dir))
     ranked = t.select(
         "grp",
         (
@@ -2390,35 +2333,20 @@ def agg_spearman_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("x"),
         F.round(F.col("c_acctbal") * 100).cast("long").alias("y"),
     )
-    from presto_truffle_spark.cache import scoped_persist
-
     t = scoped_persist(spark, "agg.spearbkt.t", t)
-    bw_df = t.agg(
-        F.expr("max(abs(x)) DIV 10000 + 1").cast("long").alias("bwx"),
-        F.expr("max(abs(y)) DIV 10000 + 1").cast("long").alias("bwy"),
-    )
     joint = (
-        t.crossJoin(F.broadcast(bw_df))
+        grid.with_width(t, "x", "y", absolute=True)
         .groupBy(
-            (F.col("x") - F.col("x") % F.col("bwx")).alias("vx"),
-            (F.col("y") - F.col("y") % F.col("bwy")).alias("vy"),
+            grid.floor("x", "bwx").alias("vx"), grid.floor("y", "bwy").alias("vy")
         )
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
     joint = scoped_persist(spark, "agg.spearbkt.joint", joint)
 
     def _ranks(col: str, alias: str) -> DataFrame:
-        marg = joint.groupBy(col).agg(
-            F.sum("cnt").cast("long").alias("nb")
-        )
-        cprev = F.coalesce(
-            F.sum("nb").over(
-                W.orderBy(col).rowsBetween(W.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        )
-        return marg.select(
-            col, (2 * cprev + F.col("nb") + 1).cast("long").alias(alias)
+        marg = joint.groupBy(col).agg(F.sum("cnt").cast("long").alias("nb"))
+        return grid.ranked(marg, col).select(
+            col, F.col("r2").cast("long").alias(alias)
         )
 
     f = (
@@ -2528,56 +2456,14 @@ def agg_mwu_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-combinable; the cumulative window and final fold run on the
     GRID-BOUNDED ≤1e4-row histogram (metadata scale). The exact op's
     docstring names this as the swap-in; this registers it."""
-    od = load_table(spark, sf_dir, "orders")
-    cu = load_table(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment").isin("AUTOMOBILE", "BUILDING")
-    )
-    t = od.join(cu, od.o_custkey == cu.c_custkey).select(
-        F.when(F.col("c_mktsegment") == "AUTOMOBILE", 1)
-        .otherwise(0)
-        .alias("grp"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    from presto_truffle_spark.cache import scoped_persist
-
-    t = scoped_persist(spark, "agg.mwubkt.t", t)
-    bw_df = t.agg(
-        F.expr("max(cents) DIV 10000 + 1").cast("long").alias("bw")
-    )
-    hist = (
-        t.crossJoin(F.broadcast(bw_df))
-        .groupBy(
-            "bw",
-            (F.col("cents") - F.col("cents") % F.col("bw")).alias("v"),
-        )
-        .agg(
-            F.count(F.when(F.col("grp") == 1, 1))
-            .cast("long")
-            .alias("n1b"),
-            F.count(F.when(F.col("grp") == 0, 1))
-            .cast("long")
-            .alias("n0b"),
-        )
-    )
-    nb = F.col("n1b") + F.col("n0b")
-    cprev = F.coalesce(
-        F.sum(F.col("n1b") + F.col("n0b")).over(
-            W.orderBy("v").rowsBetween(W.unboundedPreceding, -1)
-        ),
-        F.lit(0),
-    )
-    cum = hist.select(
-        "bw", "v", "n1b", "n0b", nb.alias("nb"), cprev.alias("cprev")
-    )
-    s = cum.agg(
+    t = scoped_persist(spark, "agg.mwubkt.t", grid.segment_cents(spark, sf_dir))
+    hist = grid.histogram(t, "cents", *grid.split_count("grp", "n1b", "n0b"))
+    s = grid.ranked(hist).agg(
         F.min("bw").cast("long").alias("bucket_width"),
         F.count(F.lit(1)).cast("long").alias("n_buckets"),
         F.sum("n1b").cast("long").alias("n1"),
         F.sum("n0b").cast("long").alias("n2"),
-        F.sum(
-            F.col("n1b").cast("decimal(38,0)")
-            * (2 * F.col("cprev") + F.col("nb") + 1)
-        ).alias("dbl_r1"),
+        F.sum(F.col("n1b").cast("decimal(38,0)") * F.col("r2")).alias("dbl_r1"),
         F.sum(
             F.col("nb").cast("decimal(38,0)") * F.col("nb") * F.col("nb")
             - F.col("nb")
@@ -2664,25 +2550,15 @@ def agg_ks_test_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows — the corpus collapses first), one max fold. Same global-sort
     posture as the rank test; at 100 TB the distinct-value table is
     the small side."""
-    od = load_table(spark, sf_dir, "orders")
-    cu = load_table(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment").isin("AUTOMOBILE", "BUILDING")
+    counts = (
+        grid.segment_cents(spark, sf_dir)
+        .groupBy("cents")
+        .agg(*grid.split_count("grp", "c1", "c2"))
     )
-    t = od.join(cu, od.o_custkey == cu.c_custkey).select(
-        F.when(F.col("c_mktsegment") == "AUTOMOBILE", 1)
-        .otherwise(0)
-        .alias("grp"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    counts = t.groupBy("cents").agg(
-        F.count(F.when(F.col("grp") == 1, 1)).cast("long").alias("c1"),
-        F.count(F.when(F.col("grp") == 0, 1)).cast("long").alias("c2"),
-    )
-    wcum = W.orderBy("cents").rowsBetween(W.unboundedPreceding, 0)
     wall = W.partitionBy()
     cum = counts.select(
-        F.sum("c1").over(wcum).cast("long").alias("f1"),
-        F.sum("c2").over(wcum).cast("long").alias("f2"),
+        grid.through("c1", "cents").alias("f1"),
+        grid.through("c2", "cents").alias("f2"),
         F.sum("c1").over(wall).cast("long").alias("n1"),
         F.sum("c2").over(wall).cast("long").alias("n2"),
     )
@@ -2924,8 +2800,6 @@ def agg_theta_sketch_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     would weaken to a ±2σ band, which is the documented production
     read. Both paths (sketch and exact) run Spark-side; the one-row
     results broadcast-join."""
-    from presto_truffle_spark.cache import scoped_persist
-
     ev = load_table(spark, sf_dir, "events")
     # ONE corpus scan: the distinct (cohort, user) table (<= 2x1500 rows
     # on the fixture — REDUCED, so persisting it is the rescan rule);
@@ -3177,8 +3051,6 @@ def agg_hdr_histogram_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame
     quantile ever computed). At 100 TB the iv fold is the only
     corpus-volume stage (map-combinable); everything downstream is
     histogram-sized."""
-    from presto_truffle_spark.cache import scoped_persist
-
     ev = load_table(spark, sf_dir, "events")
     iv_counts = ev.groupBy(
         F.floor(F.col("value") * 100 + F.lit(0.5))
@@ -3315,8 +3187,6 @@ def agg_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select(
         F.explode(F.split(F.col("text"), " ")).alias("tok")
     )
-    from presto_truffle_spark.cache import scoped_persist
-
     # One corpus-scale token fold feeds EVERYTHING: the sketch cells
     # derive from the per-token counts (r12, the TODO-r11 fusion), so
     # the x_CMS_D hash-row explode and the md5 bucket expression run
@@ -3438,40 +3308,11 @@ def agg_ks_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cumulative ECDF window runs on the grid-bounded ≤1e4-row
     histogram (the exact op's window runs on every distinct VALUE —
     value-cardinality scale, its documented weakness)."""
-    od = load_table(spark, sf_dir, "orders")
-    cu = load_table(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment").isin("AUTOMOBILE", "BUILDING")
-    )
-    t = od.join(cu, od.o_custkey == cu.c_custkey).select(
-        F.when(F.col("c_mktsegment") == "AUTOMOBILE", 1)
-        .otherwise(0)
-        .alias("grp"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    from presto_truffle_spark.cache import scoped_persist
-
-    t = scoped_persist(spark, "agg.ksbkt.t", t)
-    bw_df = t.agg(
-        F.expr("max(cents) DIV 10000 + 1").cast("long").alias("bw")
-    )
-    hist = (
-        t.crossJoin(F.broadcast(bw_df))
-        .groupBy(
-            "bw",
-            (F.col("cents") - F.col("cents") % F.col("bw")).alias("v"),
-        )
-        .agg(
-            F.count(F.when(F.col("grp") == 1, 1)).cast("long").alias("c1"),
-            F.count(F.when(F.col("grp") == 0, 1)).cast("long").alias("c2"),
-        )
-    )
+    t = scoped_persist(spark, "agg.ksbkt.t", grid.segment_cents(spark, sf_dir))
+    hist = grid.histogram(t, "cents", *grid.split_count("grp", "c1", "c2"))
     hist = scoped_persist(spark, "agg.ksbkt.hist", hist)
-    wcum = W.orderBy("v").rowsBetween(W.unboundedPreceding, 0)
     cum = hist.select(
-        "bw",
-        "v",
-        F.sum("c1").over(wcum).cast("long").alias("f1"),
-        F.sum("c2").over(wcum).cast("long").alias("f2"),
+        "bw", "v", grid.through("c1").alias("f1"), grid.through("c2").alias("f2")
     )
     tot = hist.agg(
         F.sum("c1").cast("long").alias("n1"),
@@ -3583,8 +3424,6 @@ def agg_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = e.groupBy("x", "y").agg(
         F.count(F.lit(1)).cast("long").alias("nxy")
     )
-    from presto_truffle_spark.cache import scoped_persist
-
     cells = scoped_persist(spark, "agg.mi.cells", cells)
     mx = cells.groupBy("x").agg(F.sum("nxy").cast("long").alias("nx"))
     my = cells.groupBy("y").agg(F.sum("nxy").cast("long").alias("ny"))
@@ -3725,35 +3564,12 @@ def agg_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-combinable customer fold; the decile ×
     histogram threshold join is grid × 10 (whitelisted in the plan
     audit as such); output is exactly 10 rows."""
-    per_cust = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
+    per_cust = scoped_persist(
+        spark, "agg.lorenz.percust", grid.customer_cents(spark, sf_dir)
     )
-    from presto_truffle_spark.cache import scoped_persist
-
-    per_cust = scoped_persist(spark, "agg.lorenz.percust", per_cust)
-    bw_df = per_cust.agg(
-        F.expr("max(cents) DIV 10000 + 1").cast("long").alias("bw")
-    )
-    hist = (
-        per_cust.crossJoin(F.broadcast(bw_df))
-        .groupBy(
-            (F.col("cents") - F.col("cents") % F.col("bw")).alias("v")
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("nb"),
-            F.sum("cents").cast("long").alias("sb"),
-        )
-    )
-    wcum = W.orderBy("v").rowsBetween(W.unboundedPreceding, 0)
+    hist = grid.histogram(per_cust, "cents", F.sum("cents").cast("long").alias("sb"))
     cum = hist.select(
-        F.sum("nb").over(wcum).cast("long").alias("cn"),
-        F.sum("sb").over(wcum).cast("long").alias("cs"),
+        grid.through("nb").alias("cn"), grid.through("sb").alias("cs")
     )
     tot = per_cust.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -4046,8 +3862,6 @@ def agg_benjamini_hochberg_dow(
         "bh_rank",
         F.row_number().over(W.orderBy("p", "dow")).cast("long"),
     )
-    from presto_truffle_spark.cache import scoped_persist
-
     ranked = scoped_persist(spark, "agg.bh.ranked", ranked)
     # a = 0 means p = 1 (never rejectable); guard the degenerate 0 <= k*0
     flagged = F.when(
@@ -4192,8 +4006,6 @@ def agg_empirical_bayes_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline — never a global window), and row-local arithmetic.
     At 100 TB the grid is the user dimension — the same state any
     per-user feature job carries."""
-    from presto_truffle_spark.cache import scoped_persist
-
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n"),

@@ -1355,7 +1355,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one DF-count shuffle (token -> document frequency), one
     per-doc rank window (partitioned by doc_id, ~20 rows each), one
     equi-join on prefix tokens, then candidate-bounded verification.
-    Measured (tools/prefix_filter_study.py): the prefix index carries
+    Measured (BASELINE.md, prefix-filter row): the prefix index carries
     51% of tokens; candidates 773 vs 11,533 naive at sf0.01 (15x) and
     310,161 vs 1,130,536 at sf0.1 (3.6x) — the naive space never
     materializes, but at t=0.5 the prefix is ~half of each document so

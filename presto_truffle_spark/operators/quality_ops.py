@@ -359,7 +359,7 @@ def large_small_star_components(
     one flagged scale weakness). A 10k-node chain (diameter 9 999)
     converges in ⌈log₂ n⌉ + 1 rounds here (the +1 confirms stability) vs
     10k min-label rounds — measured 7/9/10/11 rounds for n=64/256/512/1024
-    chains (tools/cc_star_study.py runs the 10k version; property tests
+    chains (BASELINE.md records the 10k version; property tests
     pin fixpoint equality with min-label on chains/stars/random graphs).
 
     Discipline carried over from min-label: per-round driver actions are

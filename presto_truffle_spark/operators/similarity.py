@@ -809,7 +809,7 @@ def ann_ivfpq_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     path then touches codes in probed cells plus k' raw vectors only —
     bounded-width shuffles keyed by (vec, sub), no all-pairs join
     anywhere. Recall study on a CLUSTERED
-    fixture (tools/ivfpq_study.py → BASELINE.md): raw-vector PQ as here
+    fixture (BASELINE.md, IVF-PQ row): raw-vector PQ as here
     reaches recall@10 0.086 at 7.5% corpus scanned; the residual-encoded
     variant (``ann_ivfpq_residual``) lifts that to 0.240 (m=4) / 0.422
     (m=8) at the same scan fraction."""
@@ -1031,7 +1031,7 @@ def ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     residuals strip the coarse cluster structure the cell assignment
     already captured, leaving the codebooks to spend their bits on
     within-cell geometry. MEASURED on the clustered fixture
-    (tools/ivfpq_study.py, trained codebooks): recall@10 0.086 (raw PQ)
+    (trained codebooks): recall@10 0.086 (raw PQ)
     → 0.240 (residual, m=4) → 0.422 (residual, m=8) at the same 7.5%
     corpus scanned; recorded in BASELINE.md.
 
@@ -2184,7 +2184,7 @@ def embedding_matryoshka_truncation(
     vectors D/8x to cut index memory, IF the prefix preserves ranking;
     this emits the per-query overlap@10 evidence instead of assuming).
     The dimension ladder complements the precision ladder
-    (tools/int8_recall_study: int4/8/16 QUANTIZATION at full dim; here
+    (BASELINE.md int8 row: int4/8/16 QUANTIZATION at full dim; here
     full precision at reduced dim — the two axes a vector-store
     capacity plan trades between).
 

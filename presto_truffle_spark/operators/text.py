@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from presto_truffle_spark.catalog import load_table
+from presto_truffle_spark.operators import grid
 from presto_truffle_spark.registry import query
 
 # (The fixed English stopword list that lived here through r13 moved to
@@ -801,7 +802,7 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id 0, candidates vec_id >= 5, identified with doc ids by the
     vec_id = doc_id convention — NOTE the fixture's embeddings are a
     separate synthetic modality, not encodings of the document text
-    (tools/bm25_study.py), so the fused lists exercise the operator's
+    (BASELINE.md, BM25 row), so the fused lists exercise the operator's
     semantics, not retrieval quality; RRF itself is rank-based and needs
     no cross-modal score calibration). Each list is taken to depth
     20, fused as sum of 1/(60 + rank) over the lists a doc appears in,
@@ -2806,20 +2807,10 @@ def ccnet_doc_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     scored = scoped_persist(spark, "corpus.ccnet.scored", scored)
-    bwq = scored.agg(
-        F.expr("max(abs(s)) DIV 10000 + 1").cast("long").alias("bw")
-    )
-    withbw = scored.crossJoin(F.broadcast(bwq))
-    hist = withbw.groupBy(
-        (F.col("s") - F.col("s") % F.col("bw")).alias("vb")
-    ).agg(_count("nb"))
-    cum = hist.select(
-        "vb",
-        F.sum("nb")
-        .over(W.orderBy("vb").rowsBetween(W.unboundedPreceding, 0))
-        .cast("long")
-        .alias("cumn"),
-    )
+    withbw = grid.with_width(scored, "s", absolute=True)
+    vb = grid.floor("s")
+    hist = withbw.groupBy(vb.alias("vb")).agg(_count("nb"))
+    cum = hist.select("vb", grid.through("nb", "vb").alias("cumn"))
     tot = scored.agg(_count("nd"))
     thr = cum.crossJoin(F.broadcast(tot)).agg(
         F.min(
@@ -2829,7 +2820,6 @@ def ccnet_doc_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("cumn") * 3 >= 2 * F.col("nd"), F.col("vb"))
         ).alias("t2"),
     )
-    vb = F.col("s") - F.col("s") % F.col("bw")
     return withbw.crossJoin(F.broadcast(thr)).select(
         "doc_id",
         F.when(vb <= F.col("t1"), "tail")
@@ -3298,27 +3288,13 @@ def eval_auc_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(p * 10000).cast("long").alias("v"),
     )
     hist = probs.groupBy("v").agg(
-        F.count(F.when(F.col("y") == 1, 1)).cast("long").alias("n1b"),
-        F.count(F.when(F.col("y") == 0, 1)).cast("long").alias("n0b"),
+        _count("nb"), *grid.split_count("y", "n1b", "n0b")
     )
-    nb = F.col("n1b") + F.col("n0b")
-    cprev = F.coalesce(
-        F.sum(F.col("n1b") + F.col("n0b")).over(
-            W.orderBy("v").rowsBetween(W.unboundedPreceding, -1)
-        ),
-        F.lit(0),
-    )
-    cum = hist.select(
-        "v", "n1b", "n0b", nb.alias("nb"), cprev.alias("cprev")
-    )
-    s = cum.agg(
+    s = grid.ranked(hist).agg(
         F.sum("n1b").cast("long").alias("n1"),
         F.sum("n0b").cast("long").alias("n0"),
         F.count(F.lit(1)).cast("long").alias("n_buckets"),
-        F.sum(
-            F.col("n1b").cast("decimal(38,0)")
-            * (2 * F.col("cprev") + F.col("nb") + 1)
-        ).alias("dbl_r1"),
+        F.sum(F.col("n1b").cast("decimal(38,0)") * F.col("r2")).alias("dbl_r1"),
     )
     return s.select(
         "n1",

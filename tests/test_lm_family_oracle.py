@@ -1,10 +1,16 @@
-"""The language-model family against its DuckDB oracles, value for value.
+"""Two shared-builder families against their DuckDB oracles, value for value.
 
-The five keys below share one count builder in ``operators/text.py``;
-this test runs each at the selfcheck fixture scale and compares it with
-its registered ``oracle_sql()`` using ``tools/selfcheck.py``'s exact,
+* The five language-model keys share one count builder, ``_LMCounts`` in
+  ``operators/text.py`` (``corpus_ccnet_quality_buckets`` also reads the
+  bucketed-rank grid below).
+* The six other bucketed-rank keys share the grid builder in
+  ``operators/grid.py``, and the three exact-rank keys share its input
+  frames (per-customer cents, two-segment cents).
+
+Each key runs at the selfcheck fixture scale and is compared with its
+registered ``oracle_sql()`` using ``tools/selfcheck.py``'s exact,
 type-aware ``canon`` and its oracle dtype gate, so a builder change that
-moves one integer micro-nat or one output type fails here.
+moves one integer micro-nat, one bucket or one output type fails here.
 """
 
 from __future__ import annotations
@@ -27,6 +33,18 @@ LM_KEYS = [
     "corpus_ccnet_quality_buckets",
 ]
 
+GRID_KEYS = [
+    "agg_gini_bucketed",
+    "agg_mwu_bucketed",
+    "agg_ks_bucketed",
+    "agg_lorenz_curve",
+    "agg_spearman_bucketed",
+    "eval_auc_bucketed",
+    "agg_gini_coefficient",
+    "agg_mann_whitney_u",
+    "agg_ks_test_two_sample",
+]
+
 
 @pytest.fixture(scope="module")
 def duck():
@@ -39,7 +57,7 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name", LM_KEYS)
+@pytest.mark.parametrize("name", LM_KEYS + GRID_KEYS)
 def test_lm_key_matches_oracle(spark, duck, name):
     import __spark_entry__ as entry
 

@@ -161,7 +161,7 @@ def test_star_components_logarithmic_rounds(spark, sf_dir):
     in ≤ ⌈log₂ n⌉ + 1 = 10 rounds (the +1 is the final no-change
     confirmation round) — the entire point of replacing min-label, which
     needs 511. Measured: 7/9/10/11 rounds for n=64/256/512/1024, i.e.
-    exactly ⌈log₂ n⌉+1. tools/cc_star_study.py runs the 10k-node version."""
+    exactly ⌈log₂ n⌉+1. BASELINE.md records the 10k-node version."""
     import math
 
     from presto_truffle_spark.operators.quality_ops import (

@@ -15,11 +15,12 @@ run their writes)
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

@@ -40,14 +40,14 @@ WHITELIST: dict[str, str] = {
     # histogram-sized input, documented in each docstring):
     "corpus_priority_sample": "rank of the k+1-row TakeOrdered frame",
     "text_dispersion_topk": "rank of the K-row TakeOrdered frame",
-    "agg_gini_bucketed": "cumsum over <=1e4-row histogram",
-    "agg_mwu_bucketed": "cumsum over <=1e4-row histogram",
-    "agg_spearman_bucketed": "cumsums over <=2e4-row marginals",
-    "agg_ks_bucketed": "ECDF cumsum over <=1e4-row histogram",
-    "eval_auc_bucketed": "rank cumsum over <=1e4-row histogram",
-    "agg_lorenz_curve": "decile x <=1e4-bucket grid threshold join + grid cumsum",
-    "corpus_ccnet_quality_buckets": "cumsum over <=1e4-row histogram",
-    "corpus_bucket_dedup_cross": "inherits the ccnet grid cumsum (<=1e4-row histogram)",
+    "agg_gini_bucketed": "grid.ranked cumsum over <=1e4-row histogram",
+    "agg_mwu_bucketed": "grid.ranked cumsum over <=1e4-row histogram",
+    "agg_spearman_bucketed": "grid.ranked cumsums over <=2e4-row marginals",
+    "agg_ks_bucketed": "grid.through ECDF cumsum over <=1e4-row histogram",
+    "eval_auc_bucketed": "grid.ranked cumsum over <=1e4-row histogram",
+    "agg_lorenz_curve": "decile x <=1e4-bucket grid threshold join + grid.through cumsum",
+    "corpus_ccnet_quality_buckets": "grid.through cumsum over <=1e4-row histogram",
+    "corpus_bucket_dedup_cross": "inherits the ccnet grid.through cumsum (<=1e4-row histogram)",
     "embedding_jl_projection": "8128-pair broadcast self-join of a fixed 128-vector frame",
     # The documented exact-rank family (VERDICT r10's 'weak 7'): exact
     # ranks need ONE global sort by definition; each op's docstring

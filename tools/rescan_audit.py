@@ -17,11 +17,12 @@ Usage: python tools/rescan_audit.py [sf_dir] [--execute]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.001"
 EXECUTE = "--execute" in sys.argv

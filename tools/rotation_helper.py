@@ -24,9 +24,11 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> int:
@@ -36,7 +38,7 @@ def main() -> int:
     reg = list(registry.QUERIES)
 
     last_green: dict[str, str] = {}
-    rounds = sorted(glob.glob("/root/repo/CORRECTNESS_r*.json"))
+    rounds = sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
     for f in rounds:
         rnd = f.rsplit("_r", 1)[1].split(".")[0]
         for k, v in json.load(open(f)).items():

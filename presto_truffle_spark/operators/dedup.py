@@ -1578,50 +1578,6 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _snm_candidate_pairs(
-    spark: SparkSession, keyed: DataFrame, key: str, site: str
-) -> DataFrame:
-    """One SNM pass over `keyed` (doc_id + a blocking-key column named
-    `key`): canonicalized candidate pairs (doc_a < doc_b) within the
-    w−1-successor window of the global (key, doc_id) order. Same
-    distributed-rank discipline as dedup_sorted_neighborhood: range
-    partitions, per-partition row_number, lazy metadata-scale prefix
-    sum of the ≤ _SNM_PARTS-row partition counts (_snm_offsets), rank
-    equi-join — no corpus-scale single-partition window, no nested
-    loop, no plan-time execution."""
-    from presto_truffle_spark.cache import scoped_persist
-
-    ranged = keyed.select("doc_id", key).repartitionByRange(
-        _SNM_PARTS, key, "doc_id"
-    ).withColumn("pid", F.spark_partition_id())
-    ranged = scoped_persist(spark, site, ranged)
-    offsets = _snm_offsets(
-        ranged.groupBy("pid").agg(
-            F.count(F.lit(1)).cast("long").alias("cnt")
-        )
-    )
-    local_rn = F.row_number().over(
-        W.partitionBy("pid").orderBy(key, "doc_id")
-    )
-    ranked = ranged.join(F.broadcast(offsets), "pid").select(
-        "doc_id", (local_rn + F.col("off")).cast("long").alias("rn")
-    )
-    a_side = ranked.select(
-        F.col("doc_id").alias("id_a"),
-        F.explode(
-            F.array(*[F.lit(k) for k in range(1, _SNM_WINDOW)])
-        ).alias("k"),
-        "rn",
-    ).select("id_a", (F.col("rn") + F.col("k")).alias("rn_b"))
-    b_side = ranked.select(
-        F.col("doc_id").alias("id_b"), F.col("rn").alias("rn_b")
-    )
-    return a_side.join(b_side, "rn_b").select(
-        F.least("id_a", "id_b").alias("doc_a"),
-        F.greatest("id_a", "id_b").alias("doc_b"),
-    )
-
-
 @query(
     "dedup_snm_multipass",
     oracle=f"""

@@ -369,9 +369,6 @@ def join_null_aware_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVL_MAX_DAYS = 49  # max fulfillment-window length: (o_orderkey % 45) + 5
-
-
 @query(
     "join_interval_overlap",
     oracle="""

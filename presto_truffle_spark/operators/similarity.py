@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from presto_truffle_spark.catalog import load_table
@@ -53,6 +53,164 @@ def _emb(df: DataFrame, id_alias: str, emb_alias: str) -> DataFrame:
         F.col("vec_id").alias(id_alias),
         F.col("embedding").cast("array<double>").alias(emb_alias),
         "label",
+    )
+
+
+# The IVF/PQ retrieval family (ann_ivf_topk*, ann_kmeans_iteration,
+# ann_pq_codes, ann_ivfpq_*, eval_cluster_ari) is built from the steps
+# below; each key keeps only its scoring, its residual or index twist and
+# its output columns. Every model-side table (centroids, codebook, query
+# probes, lookup table, shortlist) is broadcast.
+_N_CENTROIDS = 8  # IVF "centroids" = embeddings with vec_id 10..17 (pinned)
+
+# Product quantization: _PQ_M subspaces of _PQ_SUBDIM dims each; per
+# subspace the codebook is the corresponding SLICE of _PQ_K pinned seed
+# vectors (vec_id 20..23 — disjoint from the IVF seeds so the two
+# models stay independently replayable).
+_PQ_M = 4
+_PQ_SUBDIM = 16  # 64-dim fixture embeddings / _PQ_M
+_PQ_K = 4
+_PQ_SEED_LO = 20
+
+# End-to-end IVF-PQ retrieval: coarse-probe nprobe cells, rank in-cell
+# candidates by the PQ ADC (asymmetric distance computation) lookup-table
+# sum, exact re-rank only the shortlist. k' below is the shortlist width.
+_IVFPQ_NPROBE = 3
+_IVFPQ_SHORTLIST = 30
+
+
+def _vectors(spark: SparkSession, sf_dir: str, *keep: str) -> DataFrame:
+    """(vec_id, *keep, ev): every embedding, cast to array<double>."""
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", *keep, F.col("embedding").cast("array<double>").alias("ev")
+    )
+
+
+def _centroids(ev: DataFrame) -> DataFrame:
+    """(c_id, ce, cc, cnorm): the pinned IVF centroids, with cc = ce·ce
+    and cnorm = √cc."""
+    return (
+        ev.filter(F.col("vec_id").between(10, 10 + _N_CENTROIDS - 1))
+        .select(F.col("vec_id").alias("c_id"), F.col("ev").alias("ce"))
+        .withColumn("cc", _dot(F.col("ce"), F.col("ce")))
+        .withColumn("cnorm", F.sqrt("cc"))
+    )
+
+
+def _cell_rank(ev: DataFrame, cent: DataFrame, *keep: str) -> DataFrame:
+    """(vec_id, *keep, c_id, rn): every vector against every centroid,
+    ``rn`` ranking the cells by cosine rounded to 6 dp, descending, ties
+    on c_id. ``keep`` may name ``evnorm``, the vector's norm."""
+    ev = ev.withColumn("evnorm", F.sqrt(_dot(F.col("ev"), F.col("ev"))))
+    cos = _dot(F.col("ev"), F.col("ce")) / (F.col("evnorm") * F.col("cnorm"))
+    w = W.partitionBy("vec_id").orderBy(F.round(cos, 6).desc(), "c_id")
+    return ev.join(F.broadcast(cent)).select(
+        "vec_id", *keep, "c_id", F.row_number().over(w).alias("rn")
+    )
+
+
+def _probes(ranked: DataFrame, nprobe: int) -> tuple[DataFrame, DataFrame]:
+    """The query rows of ``ranked`` in their ``nprobe`` nearest cells, and
+    the corpus rows in their one nearest cell."""
+    return (
+        ranked.filter((F.col("vec_id") < _N_QUERIES) & (F.col("rn") <= nprobe)),
+        ranked.filter((F.col("vec_id") >= _N_QUERIES) & (F.col("rn") == 1)),
+    )
+
+
+def _slices(df: DataFrame, vec: str, out: str, *keep: str | Column) -> DataFrame:
+    """(*keep, sub_id, out): each row of ``df`` once per PQ sub-space,
+    ``out`` holding that sub-space's _PQ_SUBDIM-dim slice of ``vec``."""
+    subs = df.sparkSession.range(_PQ_M).select(F.col("id").cast("int").alias("sub_id"))
+    part = F.slice(F.col(vec), F.col("sub_id") * _PQ_SUBDIM + 1, _PQ_SUBDIM)
+    return df.crossJoin(subs).select(*keep, "sub_id", part.alias(out))
+
+
+def _codebook(ev: DataFrame) -> DataFrame:
+    """(sub_id, code, cs): the slices of the _PQ_K pinned seed vectors."""
+    seeds = ev.filter(F.col("vec_id").between(_PQ_SEED_LO, _PQ_SEED_LO + _PQ_K - 1))
+    code = (F.col("vec_id") - _PQ_SEED_LO).alias("code")
+    return _slices(seeds, "ev", "cs", code).select("sub_id", "code", "cs")
+
+
+def _sq_l2(a: str, b: str, aa: Column | None = None, bb: Column | None = None) -> Column:
+    """Squared L2 as a·a − 2·a·b + b·b from sequential-fold dot products
+    (DuckDB's list_dot_product order), rounded to 6 dp BEFORE any argmin
+    or rank so ULP noise cannot flip one between engines. ``aa`` and
+    ``bb`` stand in for precomputed a·a and b·b."""
+    x, y = F.col(a), F.col(b)
+    aa = _dot(x, x) if aa is None else aa
+    bb = _dot(y, y) if bb is None else bb
+    return F.round(aa - 2 * _dot(x, y) + bb, 6)
+
+
+def _pq_encode(pt: DataFrame, cb: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, sub_id, code, sub_err): each slice ``vs`` of ``pt`` coded
+    to its nearest codebook entry, argmin on (sub_err, code) per
+    (keys[0], sub_id) — the one exchange of an encode."""
+    w = W.partitionBy(keys[0], "sub_id").orderBy("sub_err", "code")
+    return (
+        pt.join(F.broadcast(cb), "sub_id")
+        .select(*keys, "sub_id", "code", _sq_l2("vs", "cs").alias("sub_err"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
+def _lut(qs: DataFrame, cb: DataFrame, *keys: str | Column) -> DataFrame:
+    """(*keys, sub_id, code, lut_micro): the ADC lookup table, each query
+    slice ``qsv`` against each codebook entry, fixed-pointed to integer
+    micros (floor(x·1e6 + 0.5)) so the ADC sum is exact."""
+    micro = F.floor(_sq_l2("qsv", "cs") * 1_000_000 + F.lit(0.5)).cast("long")
+    return qs.join(F.broadcast(cb), "sub_id").select(
+        *keys, "sub_id", "code", micro.alias("lut_micro")
+    )
+
+
+def _adc_rerank(ev: DataFrame, hits: DataFrame) -> DataFrame:
+    """(qid, cid, l2_exact, adc_micro, rnk): the looked-up ``lut_micro``
+    of ``hits`` summed per (qid, cid), the _IVFPQ_SHORTLIST best on
+    (adc_micro, cid) kept, and that shortlist re-ranked by exact squared
+    L2 to the _TOP_K best on (l2_exact, cid)."""
+    adc = hits.groupBy("qid", "cid").agg(F.sum("lut_micro").alias("adc_micro"))
+    w_adc = W.partitionBy("qid").orderBy("adc_micro", "cid")
+    short = (
+        adc.withColumn("rn", F.row_number().over(w_adc))
+        .filter(F.col("rn") <= _IVFPQ_SHORTLIST)
+        .select("qid", "cid", "adc_micro")
+    )
+    qv = ev.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("qid"), F.col("ev").alias("qe")
+    )
+    cv = ev.select(F.col("vec_id").alias("cid"), F.col("ev").alias("cvv"))
+    rer = (
+        cv.join(F.broadcast(short), "cid")
+        .join(F.broadcast(qv), "qid")
+        .select("qid", "cid", "adc_micro", _sq_l2("qe", "cvv").alias("l2_exact"))
+    )
+    w_f = W.partitionBy("qid").orderBy("l2_exact", "cid")
+    return (
+        rer.withColumn("rnk", F.row_number().over(w_f))
+        .filter(F.col("rnk") <= _TOP_K)
+        .select("qid", "cid", "l2_exact", "adc_micro", F.col("rnk").cast("long").alias("rnk"))
+    )
+
+
+def _ivfpq_raw(ev: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The raw-vector IVF-PQ model: query probes (qid, qc), corpus cells
+    (cid, cc), corpus codes (cid, sub_id, code) and the query lookup
+    table (qid, sub_id, code, lut_micro)."""
+    q_probe, cells = _probes(_cell_rank(ev, _centroids(ev)), _IVFPQ_NPROBE)
+    cb = _codebook(ev)
+    corpus = ev.filter(F.col("vec_id") >= _N_QUERIES)
+    queries = ev.filter(F.col("vec_id") < _N_QUERIES)
+    return (
+        q_probe.select(F.col("vec_id").alias("qid"), F.col("c_id").alias("qc")),
+        cells.select(F.col("vec_id").alias("cid"), F.col("c_id").alias("cc")),
+        _pq_encode(_slices(corpus, "ev", "vs", F.col("vec_id").alias("cid")), cb, "cid")
+        .drop("sub_err"),
+        _lut(_slices(queries, "ev", "qsv", F.col("vec_id").alias("qid")), cb, "qid"),
     )
 
 
@@ -345,9 +503,6 @@ def embedding_near_dup_pairs(
     )
 
 
-_N_CENTROIDS = 8  # IVF "centroids" = embeddings with vec_id 10..17 (pinned)
-
-
 def _ivf_oracle(nprobe: int) -> str:
     return f"""
     WITH cent AS (
@@ -387,25 +542,13 @@ def _ivf_oracle(nprobe: int) -> str:
 def _ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
     """IVF ANN kernel: candidates live in their ONE nearest-centroid cell;
     each query probes its ``nprobe`` nearest cells."""
-    e = load_table(spark, sf_dir, "embeddings")
-    cent = e.filter(F.col("vec_id").between(10, 10 + _N_CENTROIDS - 1)).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").cast("array<double>").alias("ce"),
-    )
-    ev = e.select("vec_id", F.col("embedding").cast("array<double>").alias("ev")).withColumn(
-        "evnorm", F.sqrt(_dot(F.col("ev"), F.col("ev")))
-    )
-    cent = cent.withColumn("cnorm", F.sqrt(_dot(F.col("ce"), F.col("ce"))))
-    sim_c = _dot(F.col("ev"), F.col("ce")) / (F.col("evnorm") * F.col("cnorm"))
-    w_assign = W.partitionBy("vec_id").orderBy(F.round(sim_c, 6).desc(), "c_id")
-    ranked = ev.join(F.broadcast(cent)).select(
-        "vec_id", "ev", "evnorm", "c_id", F.row_number().over(w_assign).alias("rn")
-    )
-    q = ranked.filter((F.col("vec_id") < _N_QUERIES) & (F.col("rn") <= nprobe)).select(
+    ev = _vectors(spark, sf_dir)
+    q, c = _probes(_cell_rank(ev, _centroids(ev), "ev", "evnorm"), nprobe)
+    q = q.select(
         F.col("vec_id").alias("qid"), F.col("ev").alias("qe"), F.col("c_id").alias("qc"),
         F.col("evnorm").alias("qn"),
     )
-    c = ranked.filter((F.col("vec_id") >= _N_QUERIES) & (F.col("rn") == 1)).select(
+    c = c.select(
         F.col("vec_id").alias("cid"), F.col("ev").alias("ce2"), F.col("c_id").alias("cc"),
         F.col("evnorm").alias("cn"),
     )
@@ -541,32 +684,14 @@ def ann_kmeans_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays outside Spark, the data never leaves the executors. At 100 TB
     this is the canonical mini-batch-able k-means step.
     """
-    e = load_table(spark, sf_dir, "embeddings")
-    cent = (
-        e.filter(F.col("vec_id").between(10, 10 + _N_CENTROIDS - 1))
-        .select(
-            F.col("vec_id").alias("c_id"),
-            F.col("embedding").cast("array<double>").alias("ce"),
-        )
-        .withColumn("cc", _dot(F.col("ce"), F.col("ce")))
-    )
-    pts = e.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("ev")
-    ).withColumn("vv", _dot(F.col("ev"), F.col("ev")))
-    d2 = F.round(
-        F.col("vv") - 2 * _dot(F.col("ev"), F.col("ce")) + F.col("cc"), 6
-    )
+    ev = _vectors(spark, sf_dir)
+    pts = ev.withColumn("vv", _dot(F.col("ev"), F.col("ev")))
+    d2 = _sq_l2("ev", "ce", F.col("vv"), F.col("cc"))
+    vsum = F.aggregate(F.col("ev"), F.lit(0.0), lambda acc, x: acc + x)
     w_assign = W.partitionBy("vec_id").orderBy("d2", "c_id")
     assigned = (
-        pts.join(F.broadcast(cent))
-        .select(
-            "vec_id",
-            "c_id",
-            d2.alias("d2"),
-            F.aggregate(
-                F.col("ev"), F.lit(0.0), lambda acc, x: acc + x
-            ).alias("vsum"),
-        )
+        pts.join(F.broadcast(_centroids(ev)))
+        .select("vec_id", "c_id", d2.alias("d2"), vsum.alias("vsum"))
         .withColumn("rn", F.row_number().over(w_assign))
         .filter(F.col("rn") == 1)
     )
@@ -575,16 +700,6 @@ def ann_kmeans_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.sum("d2"), 4).alias("inertia"),
         F.round(F.sum("vsum"), 4).alias("member_component_sum"),
     )
-
-
-# Product quantization: _PQ_M subspaces of _PQ_SUBDIM dims each; per
-# subspace the codebook is the corresponding SLICE of _PQ_K pinned seed
-# vectors (vec_id 20..23 — disjoint from the IVF seeds so the two
-# models stay independently replayable).
-_PQ_M = 4
-_PQ_SUBDIM = 16  # 64-dim fixture embeddings / _PQ_M
-_PQ_K = 4
-_PQ_SEED_LO = 20
 
 
 @query(
@@ -643,43 +758,8 @@ def ann_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     not shuffles), and the only exchange is the per-(vec, sub) argmin
     window. Encoding 100 TB of embeddings is one scan, one bounded-width
     shuffle, no all-pairs anything."""
-    e = load_table(spark, sf_dir, "embeddings")
-    subs = spark.range(_PQ_M).select(F.col("id").cast("int").alias("sub_id"))
-    ev = F.col("embedding").cast("array<double>")
-    sl = lambda: F.slice(ev, F.col("sub_id") * _PQ_SUBDIM + 1, _PQ_SUBDIM)  # noqa: E731
-    cb = (
-        e.filter(
-            F.col("vec_id").between(_PQ_SEED_LO, _PQ_SEED_LO + _PQ_K - 1)
-        )
-        .crossJoin(subs)
-        .select(
-            "sub_id",
-            (F.col("vec_id") - _PQ_SEED_LO).alias("code"),
-            sl().alias("cs"),
-        )
-    )
-    pt = e.crossJoin(subs).select("vec_id", "sub_id", sl().alias("vs"))
-    d2 = F.round(
-        _dot(F.col("vs"), F.col("vs"))
-        - 2 * _dot(F.col("vs"), F.col("cs"))
-        + _dot(F.col("cs"), F.col("cs")),
-        6,
-    )
-    w = W.partitionBy("vec_id", "sub_id").orderBy("sub_err", "code")
-    return (
-        pt.join(F.broadcast(cb), "sub_id")
-        .select("vec_id", "sub_id", "code", d2.alias("sub_err"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-
-
-# End-to-end IVF-PQ retrieval: coarse-probe nprobe cells, rank in-cell
-# candidates by the PQ ADC (asymmetric distance computation) lookup-table
-# sum, exact re-rank only the shortlist. k' below is the shortlist width.
-_IVFPQ_NPROBE = 3
-_IVFPQ_SHORTLIST = 30
+    ev = _vectors(spark, sf_dir)
+    return _pq_encode(_slices(ev, "ev", "vs", "vec_id"), _codebook(ev), "vec_id")
 
 
 _IVFPQ_ORACLE = f"""
@@ -813,113 +893,11 @@ def ann_ivfpq_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     reaches recall@10 0.086 at 7.5% corpus scanned; the residual-encoded
     variant (``ann_ivfpq_residual``) lifts that to 0.240 (m=4) / 0.422
     (m=8) at the same scan fraction."""
-    e = load_table(spark, sf_dir, "embeddings")
-    ev = e.select("vec_id", F.col("embedding").cast("array<double>").alias("ev"))
-    # --- coarse quantizer: cosine cell assignment (ann_ivf_topk kernel) ---
-    cent = (
-        ev.filter(F.col("vec_id").between(10, 10 + _N_CENTROIDS - 1))
-        .select(F.col("vec_id").alias("c_id"), F.col("ev").alias("ce"))
-        .withColumn("cnorm", F.sqrt(_dot(F.col("ce"), F.col("ce"))))
-    )
-    evn = ev.withColumn("evnorm", F.sqrt(_dot(F.col("ev"), F.col("ev"))))
-    sim_c = _dot(F.col("ev"), F.col("ce")) / (F.col("evnorm") * F.col("cnorm"))
-    w_assign = W.partitionBy("vec_id").orderBy(F.round(sim_c, 6).desc(), "c_id")
-    ranked = evn.join(F.broadcast(cent)).select(
-        "vec_id", F.row_number().over(w_assign).alias("rn"), "c_id"
-    )
-    cand_cell = ranked.filter(
-        (F.col("vec_id") >= _N_QUERIES) & (F.col("rn") == 1)
-    ).select(F.col("vec_id").alias("cid"), F.col("c_id").alias("cc"))
-    q_probe = ranked.filter(
-        (F.col("vec_id") < _N_QUERIES) & (F.col("rn") <= _IVFPQ_NPROBE)
-    ).select(F.col("vec_id").alias("qid"), F.col("c_id").alias("qc"))
-    # --- PQ encode the corpus (ann_pq_codes kernel) ---
-    subs = spark.range(_PQ_M).select(F.col("id").cast("int").alias("sub_id"))
-    sl = lambda: F.slice(  # noqa: E731
-        F.col("ev"), F.col("sub_id") * _PQ_SUBDIM + 1, _PQ_SUBDIM
-    )
-    cb = (
-        ev.filter(F.col("vec_id").between(_PQ_SEED_LO, _PQ_SEED_LO + _PQ_K - 1))
-        .crossJoin(subs)
-        .select(
-            "sub_id", (F.col("vec_id") - _PQ_SEED_LO).alias("code"), sl().alias("cs")
-        )
-    )
-    pt = (
-        ev.filter(F.col("vec_id") >= _N_QUERIES)
-        .crossJoin(subs)
-        .select(F.col("vec_id").alias("cid"), "sub_id", sl().alias("vs"))
-    )
-    d2 = F.round(
-        _dot(F.col("vs"), F.col("vs"))
-        - 2 * _dot(F.col("vs"), F.col("cs"))
-        + _dot(F.col("cs"), F.col("cs")),
-        6,
-    )
-    w_code = W.partitionBy("cid", "sub_id").orderBy("sub_err", "code")
-    codes = (
-        pt.join(F.broadcast(cb), "sub_id")
-        .select("cid", "sub_id", "code", d2.alias("sub_err"))
-        .withColumn("rn", F.row_number().over(w_code))
-        .filter(F.col("rn") == 1)
-        .select("cid", "sub_id", "code")
-    )
-    # --- per-query ADC lookup table, fixed-pointed to integer micros ---
-    qsub = (
-        ev.filter(F.col("vec_id") < _N_QUERIES)
-        .crossJoin(subs)
-        .select(F.col("vec_id").alias("qid"), "sub_id", sl().alias("qsv"))
-    )
-    lutd = F.round(
-        _dot(F.col("qsv"), F.col("qsv"))
-        - 2 * _dot(F.col("qsv"), F.col("cs"))
-        + _dot(F.col("cs"), F.col("cs")),
-        6,
-    )
-    lut = qsub.join(F.broadcast(cb), "sub_id").select(
-        "qid",
-        "sub_id",
-        "code",
-        F.floor(lutd * 1_000_000 + F.lit(0.5)).cast("long").alias("lut_micro"),
-    )
-    # --- ADC over probed cells only; exact integer sum ---
-    pairs = cand_cell.join(F.broadcast(q_probe), F.col("cc") == F.col("qc")).select(
-        "qid", "cid"
-    )
-    adc = (
-        pairs.join(codes, "cid")
-        .join(F.broadcast(lut), ["qid", "sub_id", "code"])
-        .groupBy("qid", "cid")
-        .agg(F.sum("lut_micro").alias("adc_micro"))
-    )
-    w_adc = W.partitionBy("qid").orderBy("adc_micro", "cid")
-    short = (
-        adc.withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= _IVFPQ_SHORTLIST)
-        .select("qid", "cid", "adc_micro")
-    )
-    # --- exact re-rank of the shortlist only ---
-    qv = ev.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("ev").alias("qe")
-    )
-    cv = ev.select(F.col("vec_id").alias("cid"), F.col("ev").alias("cvv"))
-    l2 = F.round(
-        _dot(F.col("qe"), F.col("qe"))
-        - 2 * _dot(F.col("qe"), F.col("cvv"))
-        + _dot(F.col("cvv"), F.col("cvv")),
-        6,
-    )
-    rer = (
-        cv.join(F.broadcast(short), "cid")
-        .join(F.broadcast(qv), "qid")
-        .select("qid", "cid", "adc_micro", l2.alias("l2_exact"))
-    )
-    w_f = W.partitionBy("qid").orderBy("l2_exact", "cid")
-    return (
-        rer.withColumn("rnk", F.row_number().over(w_f))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select("qid", "cid", "l2_exact", "adc_micro", F.col("rnk").cast("long").alias("rnk"))
-    )
+    ev = _vectors(spark, sf_dir)
+    q_probe, cells, codes, lut = _ivfpq_raw(ev)
+    pairs = cells.join(F.broadcast(q_probe), F.col("cc") == F.col("qc"))
+    hits = pairs.select("qid", "cid").join(codes, "cid")
+    return _adc_rerank(ev, hits.join(F.broadcast(lut), ["qid", "sub_id", "code"]))
 
 
 @query(
@@ -1044,129 +1022,22 @@ def ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays broadcast; the ADC join now matches on (cell, sub, code) so a
     candidate is only ever scored against the LUT of the cell it lives
     in. Same integer-micro exact-sum discipline throughout."""
-    e = load_table(spark, sf_dir, "embeddings")
-    ev = e.select("vec_id", F.col("embedding").cast("array<double>").alias("ev"))
-    cent = (
-        ev.filter(F.col("vec_id").between(10, 10 + _N_CENTROIDS - 1))
-        .select(F.col("vec_id").alias("c_id"), F.col("ev").alias("ce"))
-        .withColumn("cnorm", F.sqrt(_dot(F.col("ce"), F.col("ce"))))
+    ev = _vectors(spark, sf_dir)
+    cent = _centroids(ev)
+    q_cells, c_cells = _probes(_cell_rank(ev, cent, "ev"), _IVFPQ_NPROBE)
+    cent_vec = F.broadcast(cent.select("c_id", "ce"))
+    res = F.zip_with("ev", "ce", lambda x, y: x - y)
+    cand_res = c_cells.join(cent_vec, "c_id").select(
+        F.col("vec_id").alias("cid"), F.col("c_id").alias("cc"), res.alias("rv")
     )
-    evn = ev.withColumn("evnorm", F.sqrt(_dot(F.col("ev"), F.col("ev"))))
-    sim_c = _dot(F.col("ev"), F.col("ce")) / (F.col("evnorm") * F.col("cnorm"))
-    w_assign = W.partitionBy("vec_id").orderBy(F.round(sim_c, 6).desc(), "c_id")
-    ranked = evn.join(F.broadcast(cent)).select(
-        "vec_id", "ev", F.row_number().over(w_assign).alias("rn"), "c_id"
+    q_res = q_cells.join(cent_vec, "c_id").select(
+        F.col("vec_id").alias("qid"), F.col("c_id").alias("qc"), res.alias("qrv")
     )
-    sub_res = F.zip_with("ev", "ce", lambda x, y: x - y)
-    cand_res = (
-        ranked.filter((F.col("vec_id") >= _N_QUERIES) & (F.col("rn") == 1))
-        .join(F.broadcast(cent.select("c_id", "ce")), "c_id")
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("c_id").alias("cc"),
-            sub_res.alias("rv"),
-        )
-    )
-    q_res = (
-        ranked.filter((F.col("vec_id") < _N_QUERIES) & (F.col("rn") <= _IVFPQ_NPROBE))
-        .join(F.broadcast(cent.select("c_id", "ce")), "c_id")
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("c_id").alias("qc"),
-            sub_res.alias("qrv"),
-        )
-    )
-    subs = spark.range(_PQ_M).select(F.col("id").cast("int").alias("sub_id"))
-    cb = (
-        ev.filter(F.col("vec_id").between(_PQ_SEED_LO, _PQ_SEED_LO + _PQ_K - 1))
-        .crossJoin(subs)
-        .select(
-            "sub_id",
-            (F.col("vec_id") - _PQ_SEED_LO).alias("code"),
-            F.slice(
-                F.col("ev"), F.col("sub_id") * _PQ_SUBDIM + 1, _PQ_SUBDIM
-            ).alias("cs"),
-        )
-    )
-    pt = cand_res.crossJoin(subs).select(
-        "cid",
-        "cc",
-        "sub_id",
-        F.slice(F.col("rv"), F.col("sub_id") * _PQ_SUBDIM + 1, _PQ_SUBDIM).alias("vs"),
-    )
-    d2 = F.round(
-        _dot(F.col("vs"), F.col("vs"))
-        - 2 * _dot(F.col("vs"), F.col("cs"))
-        + _dot(F.col("cs"), F.col("cs")),
-        6,
-    )
-    w_code = W.partitionBy("cid", "sub_id").orderBy("sub_err", "code")
-    codes = (
-        pt.join(F.broadcast(cb), "sub_id")
-        .select("cid", "cc", "sub_id", "code", d2.alias("sub_err"))
-        .withColumn("rn", F.row_number().over(w_code))
-        .filter(F.col("rn") == 1)
-        .select("cid", "cc", "sub_id", "code")
-    )
-    qs = q_res.crossJoin(subs).select(
-        "qid",
-        "qc",
-        "sub_id",
-        F.slice(F.col("qrv"), F.col("sub_id") * _PQ_SUBDIM + 1, _PQ_SUBDIM).alias(
-            "qsv"
-        ),
-    )
-    lutd = F.round(
-        _dot(F.col("qsv"), F.col("qsv"))
-        - 2 * _dot(F.col("qsv"), F.col("cs"))
-        + _dot(F.col("cs"), F.col("cs")),
-        6,
-    )
-    lut = qs.join(F.broadcast(cb), "sub_id").select(
-        "qid",
-        F.col("qc").alias("cc"),
-        "sub_id",
-        "code",
-        F.floor(lutd * 1_000_000 + F.lit(0.5)).cast("long").alias("lut_micro"),
-    )
-    adc = (
-        codes.join(F.broadcast(lut), ["cc", "sub_id", "code"])
-        .groupBy("qid", "cid")
-        .agg(F.sum("lut_micro").alias("adc_micro"))
-    )
-    w_adc = W.partitionBy("qid").orderBy("adc_micro", "cid")
-    short = (
-        adc.withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= _IVFPQ_SHORTLIST)
-        .select("qid", "cid", "adc_micro")
-    )
-    qv = ev.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("ev").alias("qe")
-    )
-    cv = ev.select(F.col("vec_id").alias("cid"), F.col("ev").alias("cvv"))
-    l2 = F.round(
-        _dot(F.col("qe"), F.col("qe"))
-        - 2 * _dot(F.col("qe"), F.col("cvv"))
-        + _dot(F.col("cvv"), F.col("cvv")),
-        6,
-    )
-    rer = (
-        cv.join(F.broadcast(short), "cid")
-        .join(F.broadcast(qv), "qid")
-        .select("qid", "cid", "adc_micro", l2.alias("l2_exact"))
-    )
-    w_f = W.partitionBy("qid").orderBy("l2_exact", "cid")
-    return (
-        rer.withColumn("rnk", F.row_number().over(w_f))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select(
-            "qid",
-            "cid",
-            "l2_exact",
-            "adc_micro",
-            F.col("rnk").cast("long").alias("rnk"),
-        )
-    )
+    cb = _codebook(ev)
+    codes = _pq_encode(_slices(cand_res, "rv", "vs", "cid", "cc"), cb, "cid", "cc")
+    lut = _lut(_slices(q_res, "qrv", "qsv", "qid", "qc"), cb, "qid", F.col("qc").alias("cc"))
+    hits = codes.drop("sub_err").join(F.broadcast(lut), ["cc", "sub_id", "code"])
+    return _adc_rerank(ev, hits)
 
 
 @query("ann_ivfpq_index_build", oracle=_IVFPQ_ORACLE)
@@ -1187,125 +1058,15 @@ def ann_ivfpq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from presto_truffle_spark.sources.io import _scoped_scratch
 
-    e = load_table(spark, sf_dir, "embeddings")
-    ev = e.select("vec_id", F.col("embedding").cast("array<double>").alias("ev"))
-    cent = (
-        ev.filter(F.col("vec_id").between(10, 10 + _N_CENTROIDS - 1))
-        .select(F.col("vec_id").alias("c_id"), F.col("ev").alias("ce"))
-        .withColumn("cnorm", F.sqrt(_dot(F.col("ce"), F.col("ce"))))
-    )
-    subs = spark.range(_PQ_M).select(F.col("id").cast("int").alias("sub_id"))
-    sl = lambda: F.slice(  # noqa: E731
-        F.col("ev"), F.col("sub_id") * _PQ_SUBDIM + 1, _PQ_SUBDIM
-    )
-    cb = (
-        ev.filter(F.col("vec_id").between(_PQ_SEED_LO, _PQ_SEED_LO + _PQ_K - 1))
-        .crossJoin(subs)
-        .select(
-            "sub_id", (F.col("vec_id") - _PQ_SEED_LO).alias("code"), sl().alias("cs")
-        )
-    )
-    sim_c = _dot(F.col("ev"), F.col("ce")) / (F.col("evnorm") * F.col("cnorm"))
+    ev = _vectors(spark, sf_dir)
+    q_probe, cells, codes, lut = _ivfpq_raw(ev)
     # ---------------- BUILD: two corpus passes, written once ----------
-    corp = ev.filter(F.col("vec_id") >= _N_QUERIES).withColumn(
-        "evnorm", F.sqrt(_dot(F.col("ev"), F.col("ev")))
-    )
-    w_assign = W.partitionBy("vec_id").orderBy(F.round(sim_c, 6).desc(), "c_id")
-    cells = (
-        corp.join(F.broadcast(cent))
-        .select("vec_id", "ev", F.row_number().over(w_assign).alias("rn"), "c_id")
-        .filter(F.col("rn") == 1)
-        .select(F.col("vec_id").alias("cid"), F.col("c_id").alias("cc"))
-    )
-    pt = (
-        ev.filter(F.col("vec_id") >= _N_QUERIES)
-        .crossJoin(subs)
-        .select(F.col("vec_id").alias("cid"), "sub_id", sl().alias("vs"))
-    )
-    d2 = F.round(
-        _dot(F.col("vs"), F.col("vs"))
-        - 2 * _dot(F.col("vs"), F.col("cs"))
-        + _dot(F.col("cs"), F.col("cs")),
-        6,
-    )
-    w_code = W.partitionBy("cid", "sub_id").orderBy("sub_err", "code")
-    codes = (
-        pt.join(F.broadcast(cb), "sub_id")
-        .select("cid", "sub_id", "code", d2.alias("sub_err"))
-        .withColumn("rn", F.row_number().over(w_code))
-        .filter(F.col("rn") == 1)
-        .select("cid", "sub_id", "code")
-    )
     index_path = _scoped_scratch(spark, f"ivfpq_index_{_os.path.basename(sf_dir)}")
     cells.join(codes, "cid").write.mode("overwrite").parquet(index_path)
     # ---------------- QUERY: runs from the materialized index ---------
     index = spark.read.parquet(index_path)
-    qv = ev.filter(F.col("vec_id") < _N_QUERIES).withColumn(
-        "evnorm", F.sqrt(_dot(F.col("ev"), F.col("ev")))
-    )
-    w_q = W.partitionBy("vec_id").orderBy(F.round(sim_c, 6).desc(), "c_id")
-    q_probe = (
-        qv.join(F.broadcast(cent))
-        .select("vec_id", "ev", F.row_number().over(w_q).alias("rn"), "c_id")
-        .filter(F.col("rn") <= _IVFPQ_NPROBE)
-        .select(F.col("vec_id").alias("qid"), F.col("c_id").alias("qc"))
-    )
-    qsub = (
-        ev.filter(F.col("vec_id") < _N_QUERIES)
-        .crossJoin(subs)
-        .select(F.col("vec_id").alias("qid"), "sub_id", sl().alias("qsv"))
-    )
-    lutd = F.round(
-        _dot(F.col("qsv"), F.col("qsv"))
-        - 2 * _dot(F.col("qsv"), F.col("cs"))
-        + _dot(F.col("cs"), F.col("cs")),
-        6,
-    )
-    lut = qsub.join(F.broadcast(cb), "sub_id").select(
-        "qid",
-        "sub_id",
-        "code",
-        F.floor(lutd * 1_000_000 + F.lit(0.5)).cast("long").alias("lut_micro"),
-    )
-    adc = (
-        index.join(F.broadcast(q_probe), F.col("cc") == F.col("qc"))
-        .join(F.broadcast(lut), ["qid", "sub_id", "code"])
-        .groupBy("qid", "cid")
-        .agg(F.sum("lut_micro").alias("adc_micro"))
-    )
-    w_adc = W.partitionBy("qid").orderBy("adc_micro", "cid")
-    short = (
-        adc.withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= _IVFPQ_SHORTLIST)
-        .select("qid", "cid", "adc_micro")
-    )
-    qvec = ev.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("ev").alias("qe")
-    )
-    cvec = ev.select(F.col("vec_id").alias("cid"), F.col("ev").alias("cvv"))
-    l2 = F.round(
-        _dot(F.col("qe"), F.col("qe"))
-        - 2 * _dot(F.col("qe"), F.col("cvv"))
-        + _dot(F.col("cvv"), F.col("cvv")),
-        6,
-    )
-    rer = (
-        cvec.join(F.broadcast(short), "cid")
-        .join(F.broadcast(qvec), "qid")
-        .select("qid", "cid", "adc_micro", l2.alias("l2_exact"))
-    )
-    w_f = W.partitionBy("qid").orderBy("l2_exact", "cid")
-    return (
-        rer.withColumn("rnk", F.row_number().over(w_f))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select(
-            "qid",
-            "cid",
-            "l2_exact",
-            "adc_micro",
-            F.col("rnk").cast("long").alias("rnk"),
-        )
-    )
+    hits = index.join(F.broadcast(q_probe), F.col("cc") == F.col("qc"))
+    return _adc_rerank(ev, hits.join(F.broadcast(lut), ["qid", "sub_id", "code"]))
 
 
 _INT8_ORACLE = f"""
@@ -2685,35 +2446,8 @@ def eval_cluster_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one broadcast-centroid assignment pass (the corpus
     never shuffles for it), one grid fold; everything downstream is
     K×|labels|-bounded."""
-    e = load_table(spark, sf_dir, "embeddings")
-    cent = e.filter(
-        F.col("vec_id").between(10, 10 + _N_CENTROIDS - 1)
-    ).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").cast("array<double>").alias("ce"),
-    )
-    cent = cent.withColumn("cnorm", F.sqrt(_dot(F.col("ce"), F.col("ce"))))
-    ev = e.select(
-        "vec_id",
-        "label",
-        F.col("embedding").cast("array<double>").alias("ev"),
-    ).withColumn("evnorm", F.sqrt(_dot(F.col("ev"), F.col("ev"))))
-    sim_c = _dot(F.col("ev"), F.col("ce")) / (
-        F.col("evnorm") * F.col("cnorm")
-    )
-    w_assign = W.partitionBy("vec_id").orderBy(
-        F.round(sim_c, 6).desc(), "c_id"
-    )
-    assign = (
-        ev.join(F.broadcast(cent))
-        .select(
-            "vec_id",
-            "label",
-            "c_id",
-            F.row_number().over(w_assign).alias("rn"),
-        )
-        .filter(F.col("rn") == 1)
-    )
+    ev = _vectors(spark, sf_dir, "label")
+    assign = _cell_rank(ev, _centroids(ev), "label").filter(F.col("rn") == 1)
     cont = assign.groupBy("c_id", "label").agg(
         F.count(F.lit(1)).cast("long").alias("nij")
     )

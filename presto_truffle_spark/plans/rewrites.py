@@ -11,7 +11,7 @@ control the physical plan at scale.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from presto_truffle_spark.catalog import ALWAYS_BROADCAST, load_table
@@ -58,22 +58,6 @@ def salted_join(
         & (salted_left["_salt"] == salted_right["_salt"]),
     )
     return joined.drop("_salt")
-
-
-def topk_per_group(df: DataFrame, group_cols: list[str], order_cols: list[Column], k: int) -> DataFrame:
-    """Top-k rows per group via row_number ≤ k (WindowGroupLimit pushes the
-    limit below the sort in Spark ≥3.5 — memory stays O(k) per group)."""
-    w = W.partitionBy(*group_cols).orderBy(*order_cols)
-    return (
-        df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k).drop("_rn")
-    )
-
-
-def dedup_keep_first(df: DataFrame, key_cols: list[str], order_cols: list[Column]) -> DataFrame:
-    """Deterministic dedup: keep the first row per key under an explicit
-    total order (vs ``dropDuplicates`` whose survivor is partition-order
-    dependent — unacceptable for replayable pipelines)."""
-    return topk_per_group(df, key_cols, order_cols, 1)
 
 
 def asof_join_lastward(

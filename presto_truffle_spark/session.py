@@ -47,7 +47,7 @@ def get_spark(app_name: str = "presto_truffle_spark", cpus: str | None = None) -
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", "8g")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

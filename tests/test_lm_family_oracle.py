@@ -1,4 +1,4 @@
-"""Two shared-builder families against their DuckDB oracles, value for value.
+"""Three shared-builder families against their DuckDB oracles, value for value.
 
 * The five language-model keys share one count builder, ``_LMCounts`` in
   ``operators/text.py`` (``corpus_ccnet_quality_buckets`` also reads the
@@ -6,6 +6,9 @@
 * The six other bucketed-rank keys share the grid builder in
   ``operators/grid.py``, and the three exact-rank keys share its input
   frames (per-customer cents, two-segment cents).
+* The eight IVF/PQ retrieval keys share the centroid, cell-rank,
+  sub-space, codebook, squared-L2, PQ-encode, lookup-table and ADC
+  re-rank steps in ``operators/similarity.py``.
 
 Each key runs at the selfcheck fixture scale and is compared with its
 registered ``oracle_sql()`` using ``tools/selfcheck.py``'s exact,
@@ -45,6 +48,17 @@ GRID_KEYS = [
     "agg_ks_test_two_sample",
 ]
 
+IVFPQ_KEYS = [
+    "ann_ivf_topk",
+    "ann_ivf_topk_nprobe3",
+    "ann_kmeans_iteration",
+    "ann_pq_codes",
+    "ann_ivfpq_retrieval",
+    "ann_ivfpq_residual",
+    "ann_ivfpq_index_build",
+    "eval_cluster_ari",
+]
+
 
 @pytest.fixture(scope="module")
 def duck():
@@ -57,7 +71,7 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name", LM_KEYS + GRID_KEYS)
+@pytest.mark.parametrize("name", LM_KEYS + GRID_KEYS + IVFPQ_KEYS)
 def test_lm_key_matches_oracle(spark, duck, name):
     import __spark_entry__ as entry
 
